@@ -11,9 +11,19 @@ import org.apache.spark.sql.SparkSession
   *     aggregates stay inside whole-stage codegen;
   *   - UTC + no UI for deterministic, headless runs;
   *   - [[GraftExtensions]] applied, so the SQL surface (cosine_sim,
-  *     rhp_bucket, minhash_sig, ...) is available in every session.
+  *     rhp_bucket, minhash_sig, ...) is available in every session;
+  *   - [[streamingConf]]: checkpoint log writes that fork no processes.
   */
 object GraftSession {
+
+  /** Structured Streaming checkpoint files go through
+    * [[streaming.NioCheckpointFileManager]], so local offset and commit
+    * log writes fork no `chmod`/`readlink` per micro-batch. A fixed
+    * setting, shared with the test session, not a user option.
+    */
+  val streamingConf: Map[String, String] = Map(
+    streaming.NioCheckpointFileManager.ConfKey ->
+      classOf[streaming.NioCheckpointFileManager].getName)
 
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -43,6 +53,7 @@ object GraftSession {
       // local[32]-only constant.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      .config(streamingConf)
       .withExtensions(new GraftExtensions)
 
   /** Local session with `cores` threads; `cores` defaults to the

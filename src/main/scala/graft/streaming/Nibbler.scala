@@ -126,6 +126,17 @@ final case class NibblerConfig[T](
   * failure callback runs and `resumeAfterErr` decides continue-vs-stop
   * (nibbler.go:137-149).
   *
+  * Fixed cost per micro-batch: every push is its own `addData` block, and
+  * by default `MemoryStream` makes each block its own input partition, so
+  * a micro-batch would run one Spark task per pushed item. The source is
+  * built with exactly ONE partition instead: each micro-batch is collected
+  * to the driver anyway, so nothing runs less parallel. The count must be
+  * 1 — with more partitions `MemoryStream` deals rows round-robin, and
+  * `collect()` would no longer return them in push order. The offset and
+  * commit log entries each micro-batch writes go through
+  * [[NioCheckpointFileManager]] (installed by [[graft.GraftSession]]),
+  * which writes local checkpoint files without forking processes.
+  *
   * Scale note: this class is the embedded, in-app API (driver-side batches,
   * like the reference — batches are `size` items by contract). For
   * cluster-scale streams use [[NibblerSink]], which applies the same
@@ -137,7 +148,8 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
   private val cfg = rawCfg.sanitized
 
   private implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-  private val source = MemoryStream[T]
+  /** Exactly one input partition per micro-batch (see the class doc). */
+  private val source = MemoryStream[T](1)
   private val lock = new Object
   private val carry = ArrayBuffer.empty[T]
   private val stopped = new AtomicBoolean(false)

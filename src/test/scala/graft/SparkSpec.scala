@@ -20,6 +20,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.maxFields", "200")
+      .config(GraftSession.streamingConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -5,6 +5,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+
 import graft.SparkSpec
 
 /** Mirrors the reference's own test coverage (nibbler_test.go):
@@ -244,6 +246,55 @@ class NibblerSpec extends SparkSpec {
     // every batch respects the size cap; every BATCH_FULL flush is exactly full
     assert(got.forall(_._2.length <= 7))
     got.filter(_._1 == Trigger.BatchFull).foreach(b => assert(b._2.length == 7))
+  }
+
+  test("one Spark task per micro-batch, however many single-item pushes it holds") {
+    // Every push is its own MemoryStream block; the source's single input
+    // partition keeps a micro-batch at one task instead of one per item.
+    val stageTasks = new ConcurrentLinkedQueue[Int]() // tasks of each stage the query ran
+    val listenerCaughtUp = new CountDownLatch(1)
+    @volatile var queryId: String = null
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).foreach { p =>
+          if (queryId != null && p.getProperty("sql.streaming.queryId") == queryId)
+            stageTasks.add(e.stageInfo.numTasks)
+          if (p.getProperty("graft.test.marker") != null) listenerCaughtUp.countDown()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = new ConcurrentLinkedQueue[Int]()
+    val before = spark.streams.active.map(_.id).toSet
+    val nib = Nibbler.start(spark, NibblerConfig[Int](
+      processor = (_, b) => { b.foreach(got.add); () },
+      size = 40,
+      receiverCapacity = 40,
+      tickerDuration = 1.hour,
+      processingTimeout = 5.seconds))
+    val query = spark.streams.active.find(q => !before(q.id) && q.name.startsWith("nibbler-")).get
+    queryId = query.id.toString
+    try {
+      for (round <- 0 until 5) {
+        (1 to 40).foreach(i => nib.push(round * 40 + i))
+        nib.processAllAvailable()
+      }
+    } finally {
+      nib.stop()
+      // the listener bus delivers in order: once a later job's stage is
+      // seen, every stage of the nibbler's query has been counted
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(listenerCaughtUp.await(10, TimeUnit.SECONDS))
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(got.asScala.toVector == (1 to 200).toVector)
+    val microBatches = query.recentProgress.count(_.numInputRows > 0)
+    val tasks = stageTasks.asScala.toVector
+    info(s"$microBatches micro-batches for 200 pushes; stage task counts: $tasks")
+    assert(microBatches > 0 && microBatches < 200, "pushes should share micro-batches")
+    assert(tasks.forall(_ == 1), s"expected one task per stage, got $tasks")
+    assert(tasks.sum == microBatches, s"expected one task per micro-batch, got $tasks")
   }
 
   test("receiver backpressure: a producer pushing capacity+1 items blocks until the query drains") {

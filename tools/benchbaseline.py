@@ -44,6 +44,21 @@ PINNED = {
 NOOP_ERA_FIRST_ROUND = 17
 
 
+def fold_short_keys(qs):
+    """{full or short query name: value} -> {short baseline key: value}.
+
+    The short key is the name's pre-underscore prefix. Two names that fold
+    to the same key are an error, not a silent last-write-wins.
+    """
+    out, names = {}, {}
+    for name, v in qs.items():
+        q = name.split("_")[0]
+        if q in out:
+            raise ValueError(f"duplicate short key {q}: {names[q]!r} and {name!r}")
+        out[q], names[q] = v, name
+    return out
+
+
 def decode_queries(qs):
     # r13+: the driver stamps parsed.queries as a POINTER to the detail
     # artifact ({"runs": {long_name: [pass1, ...]}}); fold to
@@ -53,8 +68,8 @@ def decode_queries(qs):
         detail = os.path.join(ROOT, qs)
         if os.path.exists(detail):
             runs = json.load(open(detail)).get("runs") or {}
-            return {name.split("_")[0]: min(ts) for name, ts in runs.items()
-                    if isinstance(ts, list) and ts} or None
+            return fold_short_keys({name: min(ts) for name, ts in runs.items()
+                                    if isinstance(ts, list) and ts}) or None
         try:
             qs = json.loads(qs)
         except ValueError:
@@ -63,7 +78,7 @@ def decode_queries(qs):
         return None
     # r17+: the SPARK_GRAFT_BENCH_OUT artifact carries FULL query names
     # (the restored per-query channel); fold to the short baseline key.
-    return {name.split("_")[0]: t for name, t in qs.items()}
+    return fold_short_keys(qs)
 
 
 def load_rounds():
@@ -168,4 +183,8 @@ def main(extra):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    try:
+        main(sys.argv[1:])
+    except ValueError as e:
+        print(f"ERROR: {e}", file=sys.stderr)
+        sys.exit(2)
