@@ -8,9 +8,14 @@ import scala.concurrent.duration._
 import scala.concurrent.TimeoutException
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, Encoder, GraftColumnBridge, SparkSession, WakeClock}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
+import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger => SSTrigger}
+import org.apache.spark.sql.types.StructType
 
 /** Why a batch was flushed — mirrors the reference's two trigger kinds
   * (reference: nibbler.go:18-23).
@@ -116,26 +121,24 @@ final case class NibblerConfig[T](
 /** Embedded micro-batch processor: the reference's `Nibbler[T]`
   * (nibbler.go:75-197) re-expressed on Structured Streaming.
   *
-  * Receiver -> `MemoryStream[T]` (a real streaming source); the listen loop
-  * is a `StreamingQuery` with a processing-time trigger equal to the ticker
-  * duration; each micro-batch is split into `size`-capped slices — full
-  * slices flush immediately as `BatchFull` (reference: nibbler.go:160-165),
+  * Receiver -> [[PushSource]] (a real streaming source); the listen loop
+  * is a `StreamingQuery` whose trigger wakes on every push; each
+  * micro-batch is split into `size`-capped slices — full slices flush
+  * immediately as `BatchFull` (reference: nibbler.go:160-165),
   * the remainder is carried and flushed by the ticker as `Ticker`
   * (reference: nibbler.go:153-158). Batches are reset only after successful
   * processing (nibbler.go:111-114); on processor error or exception the
   * failure callback runs and `resumeAfterErr` decides continue-vs-stop
   * (nibbler.go:137-149).
   *
-  * Fixed cost per micro-batch: every push is its own `addData` block, and
-  * by default `MemoryStream` makes each block its own input partition, so
-  * a micro-batch would run one Spark task per pushed item. The source is
-  * built with exactly ONE partition instead: each micro-batch is collected
-  * to the driver anyway, so nothing runs less parallel. The count must be
-  * 1 — with more partitions `MemoryStream` deals rows round-robin, and
-  * `collect()` would no longer return them in push order. The offset and
-  * commit log entries each micro-batch writes go through
-  * [[NioCheckpointFileManager]] (installed by [[graft.GraftSession]]),
-  * which writes local checkpoint files without forking processes.
+  * Fixed cost per micro-batch: pushed items stay on the driver. The
+  * source is a driver-side buffer ([[PushSource]]) whose batches are local
+  * relations, and the sink ([[DrainSink]]) reads them with the plan's
+  * driver-local collect, so a micro-batch runs no Spark job; what a trigger
+  * still costs is planning the batch and writing its offset and commit log
+  * entries. Those go through [[NioCheckpointFileManager]] (installed by
+  * [[graft.GraftSession]]), which writes local checkpoint files without
+  * forking processes.
   *
   * Scale note: this class is the embedded, in-app API (driver-side batches,
   * like the reference — batches are `size` items by contract). For
@@ -147,9 +150,9 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
   rawCfg.validate()
   private val cfg = rawCfg.sanitized
 
-  private implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-  /** Exactly one input partition per micro-batch (see the class doc). */
-  private val source = MemoryStream[T](1)
+  private val source = new PushSource[T](spark)
+  /** The query's trigger clock: a push wakes the trigger. */
+  private val clock = new WakeClock
   private val lock = new Object
   private val carry = ArrayBuffer.empty[T]
   private val stopped = new AtomicBoolean(false)
@@ -175,7 +178,7 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
   /** Backpressure permits — the reference's buffered channel capacity
     * (`make(chan T, cfg.Size)`, nibbler.go:184): a producer blocks once
     * `receiverCapacity` pushed items are un-drained (not yet received by
-    * the listen loop's foreachBatch); the drain releases them. Closed
+    * the listen loop's sink); the drain releases them. Closed
     * exactly once on stop so blocked producers wake and observe the
     * closed receiver instead of hanging.
     */
@@ -203,48 +206,46 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
   def pushAll(items: Seq[T]): Unit = {
     if (stopped.get()) throw new Nibbler.ReceiverClosedException
     items.foreach { item =>
-      permits.acquire()
+      // about to block: let the trigger drain what is already pushed
+      if (!permits.tryAcquire()) { clock.wake(); permits.acquire() }
       if (stopped.get()) {
         permits.release()
         throw new Nibbler.ReceiverClosedException
       }
-      source.addData(item)
+      source.append(item)
     }
+    clock.wake()
   }
 
   def isActive: Boolean = !stopped.get() && query != null && query.isActive
 
   /** Start listening (reference `Listen()`, nibbler.go:125-150).
     *
-    * The QUERY trigger is a fast poll, NOT the ticker: the reference
-    * checks batch fullness on every arrival (nibbler.go:160-165), so
-    * arrivals must reach foreachBatch promptly — a trigger equal to the
-    * ticker would delay full-batch flushes (and drain calls) by up to a
-    * whole ticker period. Ticker semantics live in the carry buffer +
-    * ticker thread.
+    * The reference checks batch fullness on every arrival
+    * (nibbler.go:160-165), so pushes wake the query's trigger and reach
+    * the sink promptly. The processing-time trigger, at most 50 ms and
+    * NOT the ticker, is only a backstop (it paces `processAllAvailable`
+    * and `stop`). Ticker semantics live in the carry buffer + ticker
+    * thread.
     */
   def start(): this.type = {
     val tickMs = cfg.tickerDuration.toMillis
     val pollMs = math.max(1L, math.min(tickMs, 50L))
-    query = source.toDS().writeStream
-      .queryName(s"nibbler-${System.identityHashCode(this)}")
-      .trigger(SSTrigger.ProcessingTime(pollMs))
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[T], _: Long) =>
-        val items = batch.collect()
-        // items have LEFT the channel (the reference's listen loop
-        // received them) — free their capacity before processing, like
-        // a channel receive does
-        if (items.nonEmpty && !receiverClosed.get()) permits.release(items.length)
-        lock.synchronized {
-          if (!stopped.get()) {
-            carry ++= items
-            while (carry.length >= cfg.size && !stopped.get())
-              flushLocked(Trigger.BatchFull, cfg.size)
-          }
+    val sink = new DrainSink[T]({ items =>
+      // items have LEFT the channel (the reference's listen loop
+      // received them) — free their capacity before processing, like
+      // a channel receive does
+      if (items.nonEmpty && !receiverClosed.get()) permits.release(items.length)
+      lock.synchronized {
+        if (!stopped.get()) {
+          carry ++= items
+          while (carry.length >= cfg.size && !stopped.get())
+            flushLocked(Trigger.BatchFull, cfg.size)
         }
       }
-      .start()
+    })
+    query = GraftColumnBridge.startQuery(spark, s"nibbler-${System.identityHashCode(this)}",
+      source, sink, SSTrigger.ProcessingTime(pollMs), clock)
     ticker = Executors.newSingleThreadScheduledExecutor(r => {
       val t = new Thread(r, "nibbler-ticker"); t.setDaemon(true); t
     })
@@ -359,4 +360,68 @@ final class Nibbler[T: Encoder](spark: SparkSession, rawCfg: NibblerConfig[T]) {
     if (ticker != null) ticker.shutdown()
     worker.shutdown()
   }
+}
+
+/** The nibbler's receiver as a V1 streaming source: pushed items wait in a
+  * driver-side buffer, and the offset is the index of the last item pushed
+  * (`LongOffset`; offsets read back from the offset log arrive as
+  * `SerializedOffset`). A batch is a streaming local relation, so reading it
+  * runs no Spark job. `commit` drops the items it covers.
+  */
+private[streaming] final class PushSource[T: Encoder](spark: SparkSession) extends Source {
+  private val encoder = encoderFor[T]
+  private val toRow = encoder.createSerializer()
+  private val attributes = DataTypeUtils.toAttributes(encoder.schema)
+  private val buffer = ArrayBuffer.empty[T]
+  /** Offset of `buffer(0)`: every item before it was committed and dropped. */
+  private var base = 0L
+
+  def append(item: T): Unit = synchronized { buffer += item }
+
+  /** Items pushed and not yet committed. */
+  def buffered: Int = synchronized { buffer.length }
+
+  override def schema: StructType = encoder.schema
+
+  override def getOffset: Option[Offset] = synchronized {
+    val last = base + buffer.length - 1
+    if (last < 0) None else Some(LongOffset(last))
+  }
+
+  /** Items `(start, end]`, in push order. */
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val from = start.map(index).getOrElse(-1L) + 1
+    val items = synchronized {
+      require(from >= base, s"batch from offset $from, but items before $base were committed")
+      buffer.slice((from - base).toInt, (index(end) + 1 - base).toInt).toVector
+    }
+    GraftColumnBridge.ofRows(spark,
+      LocalRelation(attributes, items.map(toRow(_).copy()), isStreaming = true))
+  }
+
+  override def commit(end: Offset): Unit = synchronized {
+    val n = math.min(index(end) + 1 - base, buffer.length.toLong).toInt
+    if (n > 0) {
+      buffer.remove(0, n)
+      base += n
+    }
+  }
+
+  override def stop(): Unit = ()
+
+  private def index(offset: Offset): Long = offset match {
+    case o: LongOffset => o.offset
+    case o: SerializedOffset => o.json.toLong
+  }
+}
+
+/** The nibbler's V1 sink: hands each micro-batch's items to `deliver`. The
+  * batch plan is a bare `LocalTableScan`, which is never a codegen root, so
+  * `executeCollect` returns its rows on the driver without starting a job.
+  */
+private[streaming] final class DrainSink[T: Encoder](deliver: Seq[T] => Unit) extends Sink {
+  private val fromRow = encoderFor[T].resolveAndBind().createDeserializer()
+
+  override def addBatch(batchId: Long, data: DataFrame): Unit =
+    deliver(data.queryExecution.executedPlan.executeCollect().toSeq.map(fromRow(_)))
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
@@ -41,8 +41,8 @@ class NibblerSpec extends SparkSpec {
 
   test("a full batch flushes promptly under a slow ticker — never waits for the tick") {
     // The reference checks fullness ON ARRIVAL (nibbler.go:160-165); the
-    // Spark spelling must preserve that end-to-end: the query trigger is
-    // a <=50ms poll (Nibbler.start), NOT the ticker. With a ONE HOUR
+    // Spark spelling must preserve that end-to-end: a push wakes the
+    // query's trigger (Nibbler.start), NOT the ticker. With a ONE HOUR
     // ticker, any ticker-coupling would stall this flush 3.5 orders of
     // magnitude past the bound asserted here.
     val flushed = new CountDownLatch(1)
@@ -248,17 +248,17 @@ class NibblerSpec extends SparkSpec {
     got.filter(_._1 == Trigger.BatchFull).foreach(b => assert(b._2.length == 7))
   }
 
-  test("one Spark task per micro-batch, however many single-item pushes it holds") {
-    // Every push is its own MemoryStream block; the source's single input
-    // partition keeps a micro-batch at one task instead of one per item.
-    val stageTasks = new ConcurrentLinkedQueue[Int]() // tasks of each stage the query ran
+  test("the nibbler's query runs no Spark job") {
+    // Pushed items stay on the driver: each micro-batch is a local relation
+    // that the sink collects without a job, however many pushes it holds.
+    val queryJobs = new ConcurrentLinkedQueue[Int]() // jobs the query started
     val listenerCaughtUp = new CountDownLatch(1)
     @volatile var queryId: String = null
     val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
           if (queryId != null && p.getProperty("sql.streaming.queryId") == queryId)
-            stageTasks.add(e.stageInfo.numTasks)
+            queryJobs.add(e.jobId)
           if (p.getProperty("graft.test.marker") != null) listenerCaughtUp.countDown()
         }
     }
@@ -280,8 +280,8 @@ class NibblerSpec extends SparkSpec {
       }
     } finally {
       nib.stop()
-      // the listener bus delivers in order: once a later job's stage is
-      // seen, every stage of the nibbler's query has been counted
+      // the listener bus delivers in order: once a later job is seen,
+      // every job of the nibbler's query has been counted
       spark.sparkContext.setLocalProperty("graft.test.marker", "1")
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
@@ -290,11 +290,9 @@ class NibblerSpec extends SparkSpec {
     }
     assert(got.asScala.toVector == (1 to 200).toVector)
     val microBatches = query.recentProgress.count(_.numInputRows > 0)
-    val tasks = stageTasks.asScala.toVector
-    info(s"$microBatches micro-batches for 200 pushes; stage task counts: $tasks")
+    info(s"$microBatches micro-batches for 200 pushes; jobs: ${queryJobs.asScala.toVector}")
     assert(microBatches > 0 && microBatches < 200, "pushes should share micro-batches")
-    assert(tasks.forall(_ == 1), s"expected one task per stage, got $tasks")
-    assert(tasks.sum == microBatches, s"expected one task per micro-batch, got $tasks")
+    assert(queryJobs.isEmpty, s"the nibbler's query ran jobs ${queryJobs.asScala.toVector}")
   }
 
   test("receiver backpressure: a producer pushing capacity+1 items blocks until the query drains") {
