@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import graft.functions.{BloomBits, BpeEncode, CharEntropy, CosineSimilarity, CountMinSketch, HllRegisters, KMinValues, MinHashSignature, MisraGries, MrlQuantile, MrlSketchAgg, MrlUnionAgg, MultiPatternCounts, NfcNormalize, RandomHyperplaneBucket, SimHash64, SortedIntersectSize}
 
 /** Spark session extension: registers graft's custom Catalyst expressions
@@ -48,6 +49,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     case _ => throw new IllegalArgumentException(
       s"$fn: $arg must be an integer literal, got $e")
   }
+
+  /** The non-NULL strings of a foldable (literal) array argument. */
+  private def litStrings(e: Expression, fn: String, arg: String): Seq[String] = {
+    require(e.foldable, s"$fn: $arg must be a LITERAL array of strings " +
+      "(a model artifact, not per-row data)")
+    e.eval() match {
+      case a: ArrayData =>
+        (0 until a.numElements()).map { i =>
+          val u = a.getUTF8String(i)
+          require(u != null, s"$fn: $arg must not contain NULL (element $i)")
+          u.toString
+        }
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be an array of strings, got $other")
+    }
+  }
+
+  /** A Column builder applied to an argument expression. */
+  private def viaColumn(e: Expression)(f: Column => Column): Expression =
+    GraftColumnBridge.expression(f(GraftColumnBridge.column(e)))
 
   private def register(ext: SparkSessionExtensions, name: String,
       builder: Seq[Expression] => Expression): Unit =
@@ -109,11 +130,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
     register(ext, "nfc_normalize", { children =>
       require(children.length == 1, "nfc_normalize expects exactly 1 argument")
-      NfcNormalize(children.head)
+      viaColumn(children.head)(NfcNormalize(_))
     })
     register(ext, "char_entropy", { children =>
       require(children.length == 1, "char_entropy expects exactly 1 argument")
-      CharEntropy(children.head)
+      viaColumn(children.head)(CharEntropy(_))
     })
     register(ext, "mrl_sketch", { children =>
       require(children.length == 2, "mrl_sketch expects (value, k)")
@@ -131,41 +152,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register(ext, "multi_pattern_counts", { children =>
       require(children.length == 2,
         "multi_pattern_counts expects (text, patterns: array of strings)")
-      val m = children(1)
-      require(m.foldable,
-        "multi_pattern_counts: patterns must be a LITERAL array of strings " +
-          "(the blocklist is a model artifact, not per-row data)")
-      val pats = m.eval() match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          (0 until a.numElements()).map { i =>
-            val u = a.getUTF8String(i)
-            require(u != null,
-              s"multi_pattern_counts: patterns must not contain NULL (element $i)")
-            u.toString
-          }
-        case other => throw new IllegalArgumentException(
-          s"multi_pattern_counts: patterns must be an array of strings, got $other")
-      }
-      MultiPatternCounts(children.head, pats)
+      val pats = litStrings(children(1), "multi_pattern_counts", "patterns")
+      viaColumn(children.head)(MultiPatternCounts(_, pats))
     })
     register(ext, "bpe_encode", { children =>
       require(children.length == 2,
         "bpe_encode expects (word, merges: array of 'left right' strings)")
-      val m = children(1)
-      require(m.foldable,
-        "bpe_encode: merges must be a LITERAL array of 'left right' strings " +
-          "(the table is a model artifact, not per-row data)")
-      val lines = m.eval() match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          (0 until a.numElements()).map { i =>
-            val u = a.getUTF8String(i)
-            require(u != null,
-              s"bpe_encode: merges must not contain NULL (element $i)")
-            u.toString
-          }
-        case other => throw new IllegalArgumentException(
-          s"bpe_encode: merges must be an array of strings, got $other")
-      }
+      val lines = litStrings(children(1), "bpe_encode", "merges")
       val merges = lines.map { line =>
         // no limit: 'a b c' must be REJECTED, not parsed as ('a', 'b c')
         // — symbols can't contain spaces, and buildRanks keys ranks by
@@ -175,7 +168,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"bpe_encode: merge line '$line' must be exactly 'left right'")
         (sp(0), sp(1))
       }
-      BpeEncode(children.head, merges)
+      viaColumn(children.head)(BpeEncode(_, merges))
     })
   }
 }

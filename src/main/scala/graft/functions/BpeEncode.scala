@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,44 +18,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: the merges table is a MODEL artifact — bounded by the
   * vocabulary parameter (~50k rows for public GPT-2-class vocabs), never
-  * by the data — so it ships inside the expression as a codegen
-  * reference object (`ctx.addReferenceObj`), exactly how a broadcast
-  * variable would reach an executor but with zero join: the whole encode
-  * is a NARROW map-side op inside whole-stage codegen. This is the
-  * preference-order (b) spelling — a custom Expression beats both an
-  * iterative join loop (rounds of corpus-wide shuffles) and a UDF.
+  * by the data — so it is built once per column and travels as a
+  * [[Model]] argument of a [[StaticCall]] (a codegen reference object),
+  * exactly how a broadcast variable would reach an executor but with zero
+  * join: the whole encode is a NARROW map-side op inside whole-stage
+  * codegen. This is the preference-order (b) spelling — a codegen
+  * expression beats both an iterative join loop (rounds of corpus-wide
+  * shuffles) and a UDF.
   */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "bpe_encode"
-
-  // rebuilt lazily on each executor after serialization; the case-class
-  // field `merges` is the portable form
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] =
-    BpeEncode.buildRanks(merges)
-
-  override protected def nullSafeEval(w: Any): Any =
-    BpeEncode.encodeToArrayData(w.asInstanceOf[UTF8String].toString, ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncode.encodeToArrayData($c.toString(), $ranksRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
 object BpeEncode {
   /** Column-level entry point: `BpeEncode($"word", merges)`. */
-  def apply(w: Column, merges: Seq[(String, String)]): Column =
-    GraftColumnBridge.column(BpeEncode(GraftColumnBridge.expression(w), merges))
+  def apply(w: Column, merges: Seq[(String, String)]): Column = {
+    val ranks = buildRanks(merges)
+    StaticCall(this, "encode", "bpe_encode", ArrayType(StringType, containsNull = false),
+      w, StringType, new Model(ranks, s"merges(${ranks.size})"))
+  }
 
   /** Rank table keyed "left right" (the public merges-file line format). */
   def buildRanks(merges: Seq[(String, String)]): java.util.HashMap[String, Integer] = {
@@ -69,10 +44,7 @@ object BpeEncode {
     m
   }
 
-  /** The greedy encode loop — static so generated code calls it directly
-    * (the XXH64 pattern: one static call per row, whole-stage codegen
-    * intact).
-    */
+  /** The greedy encode loop. */
   def encodeWord(word: String, ranks: java.util.HashMap[String, Integer]): Array[String] = {
     if (word.isEmpty) return Array.empty
     // split into Unicode code points, not Java chars, so surrogate pairs
@@ -117,6 +89,7 @@ object BpeEncode {
     syms
   }
 
-  def encodeToArrayData(word: String, ranks: java.util.HashMap[String, Integer]): GenericArrayData =
-    new GenericArrayData(encodeWord(word, ranks).map(w => UTF8String.fromString(w): Any))
+  /** The per-row call — static so generated code calls it directly. */
+  def encode(word: UTF8String, ranks: Model[java.util.HashMap[String, Integer]]): GenericArrayData =
+    new GenericArrayData(encodeWord(word.toString, ranks.value).map(w => UTF8String.fromString(w): Any))
 }

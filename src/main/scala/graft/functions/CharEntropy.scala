@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,9 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * spelling (graft.operators.TextAnalysis.charEntropy — kept as the
   * cross-check twin and the grouped-use form) pays two corpus shuffles
   * that this expression removes entirely: the benched t33 plan is a
-  * narrow scan projection (the PHash63/NfcNormalize static-call
-  * convention — no HOF chain, no UDF serialization, embarrassingly
-  * parallel at 100 TB).
+  * narrow scan projection (one [[StaticCall]] — no HOF chain, no UDF
+  * serialization, embarrassingly parallel at 100 TB).
   *
   * BIT-EQUAL to the aggregate spelling by construction, not by luck:
   * same char units (Java regex split("") — code-point boundaries, the
@@ -27,34 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * same shared ln2 literal. The spec pins equality on the corpus and on
   * seeded random strings.
   */
-case class CharEntropy(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+object CharEntropy {
+  private val Ln2 = 0.6931471805599453
 
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = StructType(Seq(
+  private val Entropy = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false),
     StructField("h_bits", DoubleType, nullable = false)))
 
-  override def prettyName: String = "char_entropy"
-
-  override protected def nullSafeEval(s: Any): Any =
-    CharEntropy.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharEntropy.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-}
-
-object CharEntropy {
-  private val Ln2 = 0.6931471805599453
-
   def apply(t: Column): Column =
-    GraftColumnBridge.column(CharEntropy(GraftColumnBridge.expression(t)))
+    StaticCall(this, "compute", "char_entropy", Entropy, t, StringType)
 
   def compute(s: UTF8String): InternalRow = {
     val parts = s.toString.split("")

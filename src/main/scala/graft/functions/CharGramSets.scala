@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * repartition(doc_id) + posexplode (one row per CHARACTER) + lead
   * window + groupBy(doc_id)/distinct — two full exchanges of
   * corpus-character-proportional rows to compute a value that is a pure
-  * row-local function of the text. These expressions compute the same
-  * sets in one whole-stage-codegen projection (the DHash63 /
-  * MultiPatternCounts static-call convention), removing both exchanges
-  * outright (guide §2.4) and the per-character row materialization.
+  * row-local function of the text. These functions compute the same
+  * sets in one whole-stage-codegen projection (a [[StaticCall]] each),
+  * removing both exchanges outright (guide §2.4) and the per-character
+  * row materialization.
   *
   * Gram-id contract (bit-identical to charGramIds, k <= 4 only): code
   * points of the text (split("")/ascii semantics: Spark's Ascii is
@@ -82,15 +80,15 @@ private[functions] object CharGramPack {
     new GenericArrayData(java.util.Arrays.copyOf(ids, w))
   }
 
-  def gramIdSet(text: String, k: Int): GenericArrayData =
-    sortedDistinct(gramIds(text, k))
+  def gramIdSet(text: UTF8String, k: Int): GenericArrayData =
+    sortedDistinct(gramIds(text.toString, k))
 
   /** Distinct sliding-window minima: fp_i = min(id[i .. min(i+w-1,
     * last)]) — the rowsBetween(0, w-1) winnowing frame with its
     * shrinking tail, then sorted distinct.
     */
-  def winnowFpSet(text: String, k: Int, w: Int): GenericArrayData = {
-    val ids = gramIds(text, k)
+  def winnowFpSet(text: UTF8String, k: Int, w: Int): GenericArrayData = {
+    val ids = gramIds(text.toString, k)
     val n = ids.length
     if (n == 0) return new GenericArrayData(Array.emptyLongArray)
     val fps = new Array[Long](n)
@@ -111,57 +109,23 @@ private[functions] object CharGramPack {
 }
 
 /** Sorted distinct packed char-k-gram ids of a text column. */
-case class SortedGramIdSet(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1 && k <= 4, s"k in [1,4] (the injective-pack range), got $k")
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sorted_gram_id_set"
-
-  override protected def nullSafeEval(t: Any): Any =
-    CharGramPack.gramIdSet(t.asInstanceOf[UTF8String].toString, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharGramPack.gramIdSet($c.toString(), $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): SortedGramIdSet =
-    copy(child = newChild)
-}
-
 object SortedGramIdSet {
-  def apply(t: Column, k: Int): Column =
-    GraftColumnBridge.column(SortedGramIdSet(GraftColumnBridge.expression(t), k))
+  def apply(t: Column, k: Int): Column = {
+    require(k >= 1 && k <= 4, s"k in [1,4] (the injective-pack range), got $k")
+    StaticCall(CharGramPack, "gramIdSet", "sorted_gram_id_set",
+      ArrayType(LongType, containsNull = false), t, StringType, k)
+  }
 }
 
 /** Sorted distinct winnowing fingerprints (window-min gram ids) of a
   * text column — Schleimer et al.'s selection, k-gram ids as above,
   * window w with the shrinking rowsBetween(0, w-1) tail.
   */
-case class WinnowFingerprintSet(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1 && k <= 4, s"k in [1,4] (the injective-pack range), got $k")
-  require(w >= 1, s"w must be >= 1, got $w")
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fingerprint_set"
-
-  override protected def nullSafeEval(t: Any): Any =
-    CharGramPack.winnowFpSet(t.asInstanceOf[UTF8String].toString, k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharGramPack.winnowFpSet($c.toString(), $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprintSet =
-    copy(child = newChild)
-}
-
 object WinnowFingerprintSet {
-  def apply(t: Column, k: Int, w: Int): Column =
-    GraftColumnBridge.column(WinnowFingerprintSet(GraftColumnBridge.expression(t), k, w))
+  def apply(t: Column, k: Int, w: Int): Column = {
+    require(k >= 1 && k <= 4, s"k in [1,4] (the injective-pack range), got $k")
+    require(w >= 1, s"w must be >= 1, got $w")
+    StaticCall(CharGramPack, "winnowFpSet", "winnow_fingerprint_set",
+      ArrayType(LongType, containsNull = false), t, StringType, k, w)
+  }
 }

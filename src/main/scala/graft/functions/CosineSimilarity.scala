@@ -16,6 +16,9 @@ import org.apache.spark.sql.types._
   * Arithmetic shape (interleaved adds into dot/na/nb, final
   * dot / sqrt(na * nb)) is bit-identical to both the HOF spelling and the
   * DuckDB oracle's list_reduce fold, so it can serve oracle-checked queries.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): its loop is
+  * generated inline over the input arrays, with no method call per row.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

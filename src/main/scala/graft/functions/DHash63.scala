@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd perceptual dHash (SURVEY.md §2 F6/F10) — 72 sampled
@@ -19,9 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * serialized closure PER TASK (the r15 verdict's bench-tail finding);
   * the first r16 fix folded it into transform/aggregate HOFs — flat task
   * binary but INTERPRETED per element with no common-subexpression
-  * elimination (m6 18.1 s vs its 1.93 s floor, measured). This static
-  * call is both: one ~150-int-op pass per row inside whole-stage codegen
-  * AND a task binary that carries only the method reference.
+  * elimination (m6 18.1 s vs its 1.93 s floor, measured). This
+  * [[StaticCall]] is both: one ~150-int-op pass per row inside
+  * whole-stage codegen AND a task binary that carries only the method
+  * reference.
   *
   * Character positions are Java-string (UTF-16) indices with INTEGER
   * division (p·(n−1))/71 — identical to the DuckDB oracle's
@@ -31,30 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashes to 0; callers coalesce null to '' for the legacy null→0
   * convention.
   */
-case class DHash63(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "dhash63"
-
-  override protected def nullSafeEval(s: Any): Any =
-    DHash63.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DHash63.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DHash63 =
-    copy(child = newChild)
-}
-
 object DHash63 {
   /** Column-level entry point: `DHash63($"text")`. */
   def apply(t: Column): Column =
-    GraftColumnBridge.column(DHash63(GraftColumnBridge.expression(t)))
+    StaticCall(this, "compute", "dhash63", LongType, t, StringType)
 
   def compute(s: UTF8String): Long = {
     val str = s.toString

@@ -23,6 +23,9 @@ import org.apache.spark.sql.types._
   * NULL (the literal spelling's element_at(null) poisoning, surfaced at
   * the row level — the audits make this unreachable on published
   * artifacts).
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): the broadcast value
+  * is resolved once per task into generated state, not once per row.
   */
 case class PqReconstruct(child: Expression,
     books: Broadcast[Array[Array[Array[Float]]]])
@@ -122,6 +125,8 @@ object PqReconstruct {
   * Runs on the QUERY side (a handful of rows per batch / one row per
   * arriving stream query), so interpreted eval (CodegenFallback) costs
   * nothing measurable — the corpus-side hot path is [[PqReconstruct]].
+  * It stays an interpreted expression rather than a [[StaticCall]] for
+  * that reason.
   */
 case class ProbeTopLists(child: Expression,
     lists: Broadcast[Array[Array[Float]]], nProbe: Int)
@@ -200,6 +205,9 @@ object ProbeTopLists {
   * plan literal (same task-binary discipline). Out-of-range or null
   * list ids yield NULL (unreachable on audited artifacts — codes carry
   * the list-referential audit).
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): the broadcast value
+  * is resolved once per task into generated state, not once per row.
   */
 case class ListCentroid(child: Expression,
     lists: Broadcast[Array[Array[Float]]])

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,48 +14,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * and |patterns| regex passes cannot afford.
   *
   * Scale shape: the automaton is bounded by the total pattern length —
-  * a MODEL/blocklist artifact, never data-bounded — so it ships inside
-  * the expression as a codegen reference object (the [[BpeEncode]]
-  * convention): one static call per row inside whole-stage codegen,
-  * O(|text| + matches) per row regardless of how many thousand
-  * blocklist terms the automaton holds. This is what makes a 10k-term
-  * blocklist a narrow map-side projection instead of 10k regex scans.
+  * a MODEL/blocklist artifact, never data-bounded — so it is built once
+  * per column and travels as a constant argument of a [[StaticCall]]
+  * (a codegen reference object): one static call per row inside
+  * whole-stage codegen, O(|text| + matches) per row regardless of how
+  * many thousand blocklist terms the automaton holds. This is what makes
+  * a 10k-term blocklist a narrow map-side projection instead of 10k
+  * regex scans.
   */
-case class MultiPatternCounts(child: Expression, patterns: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
-    "patterns must be a non-empty list of non-empty strings")
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "multi_pattern_counts"
-
-  // rebuilt lazily on each executor after serialization; the case-class
-  // field `patterns` is the portable form (the BpeEncode ranks pattern)
-  @transient private lazy val automaton: AcAutomaton = AcAutomaton.build(patterns)
-
-  override protected def nullSafeEval(t: Any): Any =
-    AcAutomaton.countsToArrayData(
-      t.asInstanceOf[UTF8String].toString, automaton, patterns.size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val acRef = ctx.addReferenceObj("acAutomaton", automaton, "graft.functions.AcAutomaton")
-    val n = patterns.size
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.AcAutomaton.countsToArrayData($c.toString(), $acRef, $n);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MultiPatternCounts =
-    copy(child = newChild)
-}
-
 object MultiPatternCounts {
   /** Column-level entry point: `MultiPatternCounts($"text", patterns)`. */
-  def apply(t: Column, patterns: Seq[String]): Column =
-    GraftColumnBridge.column(MultiPatternCounts(GraftColumnBridge.expression(t), patterns))
+  def apply(t: Column, patterns: Seq[String]): Column = {
+    require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
+      "patterns must be a non-empty list of non-empty strings")
+    StaticCall(this, "counts", "multi_pattern_counts", ArrayType(LongType, containsNull = false),
+      t, StringType, AcAutomaton.build(patterns), patterns.size)
+  }
+
+  /** The per-row call — static so generated code calls it directly. */
+  def counts(text: UTF8String, ac: AcAutomaton, nPatterns: Int): GenericArrayData =
+    AcAutomaton.countsToArrayData(text.toString, ac, nPatterns)
 }
 
 /** The compiled Aho-Corasick automaton: goto trie + BFS fail links,
@@ -68,7 +44,9 @@ object MultiPatternCounts {
 final class AcAutomaton(
     val next: Array[java.util.HashMap[Character, Integer]],
     val fail: Array[Int],
-    val out: Array[Array[Int]]) extends Serializable
+    val out: Array[Array[Int]]) extends Serializable {
+  override def toString: String = s"AcAutomaton(${fail.length} states)"
+}
 
 object AcAutomaton {
 
@@ -117,9 +95,7 @@ object AcAutomaton {
     new AcAutomaton(next.toArray, fail, out.map(_.toArray))
   }
 
-  /** The match walk — static so generated code calls it directly (the
-    * BpeEncode convention; whole-stage codegen intact).
-    */
+  /** The match walk. */
   def countsToArrayData(text: String, ac: AcAutomaton, nPatterns: Int): GenericArrayData = {
     val counts = new Array[Long](nPatterns)
     var s = 0

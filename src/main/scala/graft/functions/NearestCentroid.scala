@@ -141,7 +141,7 @@ object NearestCentroid {
     * still codes (to the smallest id), exactly like the exploded
     * slice+max_by spelling this replaces.
     */
-  def encode(emb: ArrayData, ds: Int, book: CentroidBook): Array[Int] = {
+  def encode(emb: ArrayData, ds: Int, book: CentroidBook): GenericArrayData = {
     val m = book.nSubs
     val n = emb.numElements()
     val out = new Array[Int](m)
@@ -152,14 +152,17 @@ object NearestCentroid {
       out(s) = nearestIdx(emb, off, len, s, book)
       s += 1
     }
-    out
+    new GenericArrayData(out)
   }
 }
 
 /** Nearest-centroid id for (embedding, sub) against a driver-collected
   * codebook — max_by(centroid_id, struct(score, −centroid_id)) as one
-  * codegen'd static call (the DHash63 flat-task-binary convention).
-  * Null only for a null/out-of-range sub.
+  * codegen'd static call (a flat task binary). Null only for a
+  * null/out-of-range sub.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): a null embedding
+  * still gets an id, while a null or out-of-range `sub` gives null.
   */
 case class NearestCentroidId(child: Expression, sub: Expression,
     book: CentroidBook)
@@ -221,41 +224,13 @@ object NearestCentroidId {
 
 /** All m PQ codes of one vector as DENSE indexes into the book's
   * id-sorted candidate arrays — the exploded slice + broadcast-join +
-  * max_by + groupBy encode pipeline as one map-side codegen call. The
+  * max_by + groupBy encode pipeline as one map-side [[StaticCall]]. The
   * output feeds [[PqReconstruct]] directly (book.vecs IS its layout).
   */
-case class PqEncodeCodes(child: Expression, ds: Int, book: CentroidBook)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(ds >= 1, s"ds must be >= 1, got $ds")
-
-  override def inputTypes = Seq(ArrayType(FloatType))
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "pq_encode_codes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      NearestCentroid.encode(input.asInstanceOf[ArrayData], ds, book))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bookRef = ctx.addReferenceObj("pqEncBook", book,
-      classOf[CentroidBook].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.functions.NearestCentroid.encode($c, $ds, $bookRef));
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeCodes =
-    copy(child = newChild)
-}
-
 object PqEncodeCodes {
-  def apply(emb: Column, ds: Int, book: CentroidBook): Column =
-    GraftColumnBridge.column(
-      PqEncodeCodes(GraftColumnBridge.expression(emb), ds, book))
+  def apply(emb: Column, ds: Int, book: CentroidBook): Column = {
+    require(ds >= 1, s"ds must be >= 1, got $ds")
+    StaticCall(NearestCentroid, "encode", "pq_encode_codes",
+      ArrayType(IntegerType, containsNull = false), emb, ArrayType(FloatType), ds, book)
+  }
 }

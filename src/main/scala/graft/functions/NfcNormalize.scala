@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd Unicode NFC normalization (SURVEY.md §2 H9 / E23): canonical
@@ -17,38 +15,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the same input.
   *
   * Scale shape: a NARROW per-row projection inside whole-stage codegen
-  * (one static call, the BpeEncode convention) — no shuffle, no UDF
-  * serialization.
+  * (one [[StaticCall]]) — no shuffle, no UDF serialization.
   */
-case class NfcNormalize(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(s: Any): Any =
-    NfcNormalize.normalize(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.normalize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
   /** Column-level entry point: `NfcNormalize($"text")`. */
   def apply(t: Column): Column =
-    GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(t)))
+    StaticCall(this, "normalize", "nfc_normalize", StringType, t, StringType)
 
-  /** Static per-row call (the XXH64/BpeEncode convention — generated
-    * code calls this directly, whole-stage codegen intact). Fast path:
-    * `Normalizer.isNormalized` is O(n) with no allocation for the
-    * already-NFC common case, so clean ASCII corpora pay no copy.
+  /** The per-row call — static so generated code calls it directly.
+    * Fast path: `Normalizer.isNormalized` is O(n) with no allocation for
+    * the already-NFC common case, so clean ASCII corpora pay no copy.
     */
   def normalize(s: UTF8String): UTF8String = {
     val str = s.toString

@@ -20,6 +20,9 @@ import org.apache.spark.sql.types.DataType
   * pushed, not duplicated, not constant-folded. The wrapped tree must
   * itself be pure — Opaque changes WHERE it runs, never what it
   * returns — so results are bit-identical by construction.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): it emits its
+  * child's generated code unchanged, which no method call can do.
   */
 case class Opaque(child: Expression) extends UnaryExpression {
 

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd DCT perceptual hash (SURVEY.md §2 H10 / F13) — pHash proper:
@@ -12,12 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * mean-pooled gray samples through [[PHash63.fromSamples]] instead),
   * fixed-point Q12 integer DCT-II, bit j-1 = [63*F(u,v) > sum_AC F].
   *
-  * Spelled as ONE narrow codegen'd expression (the NfcNormalize/BpeEncode
-  * static-call convention) rather than higher-order array functions: HOFs
-  * evaluate INTERPRETED with no common-subexpression elimination, so a
-  * chained transform/aggregate spelling re-computes every earlier stage
-  * inside every element of the next — measured ~10^9 string ops per row
-  * on this 4-stage pipeline. The static call runs the same integer math
+  * Spelled as ONE narrow codegen'd [[StaticCall]] rather than
+  * higher-order array functions: HOFs evaluate INTERPRETED with no
+  * common-subexpression elimination, so a chained transform/aggregate
+  * spelling re-computes every earlier stage inside every element of the
+  * next — measured ~10^9 string ops per row on this 4-stage pipeline.
+  * The static call runs the same integer math
   * once per row (~3.5k int ops) inside whole-stage codegen: embarrassingly
   * parallel at 100 TB, no shuffle, no UDF serialization.
   *
@@ -33,30 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB's codepoint positions for BMP text (the m6 ascii() convention —
   * the corpus contract is ASCII/BMP).
   */
-case class PHash63(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "phash63"
-
-  override protected def nullSafeEval(s: Any): Any =
-    PHash63.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PHash63.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PHash63 =
-    copy(child = newChild)
-}
-
 object PHash63 {
   /** Column-level entry point: `PHash63($"text")`. */
   def apply(t: Column): Column =
-    GraftColumnBridge.column(PHash63(GraftColumnBridge.expression(t)))
+    StaticCall(this, "compute", "phash63", LongType, t, StringType)
 
   /** Fixed-point Q12 cosine table for the 16->8 DCT-II: CosQ12(u*16+x) =
     * round(cos(pi(2x+1)u/32)*4096), u in 0..7, x in 0..15. Baked as

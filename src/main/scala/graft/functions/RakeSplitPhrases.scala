@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,39 +26,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * empties dropped. RakeSplitPhrasesSpec pins equality to the regex
   * spelling on the real corpus and edge shapes.
   */
-case class RakeSplitPhrases(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(stopwords.nonEmpty && stopwords.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),
-    "stopwords must be non-empty lowercase ascii words")
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "rake_split_phrases"
-
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    stopwords.foreach(s.add)
-    s
-  }
-
-  override protected def nullSafeEval(t: Any): Any =
-    RakeSplitPhrases.phrases(t.asInstanceOf[UTF8String].toString, stopSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("rakeStops", stopSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RakeSplitPhrases.phrases($c.toString(), $setRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RakeSplitPhrases =
-    copy(child = newChild)
-}
-
 object RakeSplitPhrases {
-  def apply(t: Column, stopwords: Seq[String]): Column =
-    GraftColumnBridge.column(
-      RakeSplitPhrases(GraftColumnBridge.expression(t), stopwords))
+  def apply(t: Column, stopwords: Seq[String]): Column = {
+    require(stopwords.nonEmpty && stopwords.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),
+      "stopwords must be non-empty lowercase ascii words")
+    val stops = new java.util.HashSet[String]()
+    stopwords.foreach(stops.add)
+    StaticCall(this, "phrases", "rake_split_phrases",
+      ArrayType(StringType, containsNull = false), t, StringType,
+      new Model(stops, s"stopwords(${stops.size})"))
+  }
 
   private def isWs(c: Char): Boolean = // Java regex \s, no UNICODE flag
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
@@ -70,7 +45,9 @@ object RakeSplitPhrases {
       (c >= '0' && c <= '9') || c == '_'
 
   /** The walk — static so generated code calls it directly. */
-  def phrases(text: String, stops: java.util.HashSet[String]): GenericArrayData = {
+  def phrases(t: UTF8String, stopSet: Model[java.util.HashSet[String]]): GenericArrayData = {
+    val text = t.toString
+    val stops = stopSet.value
     val n = text.length
     val delim = new Array[Boolean](n)
     var i = 0

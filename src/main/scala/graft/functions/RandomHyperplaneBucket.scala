@@ -15,6 +15,9 @@ import org.apache.spark.sql.types._
   * +1 iff xxhash64(p*1000003 + i) is even (seed 42, Spark's XXH64), and
   * the projection accumulates left-to-right in double. The HOF version
   * evaluates interpreted per element; this is one fused codegen loop.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): its loop is
+  * generated inline over the input arrays, with no method call per row.
   */
 case class RandomHyperplaneBucket(child: Expression, planes: Int)
     extends UnaryExpression with ExpectsInputTypes {

@@ -35,6 +35,9 @@ import org.apache.spark.sql.types._
   * — so a malformed array with null slots contributes 0.0 where the HOF
   * spelling would have propagated NULL; the "bit-identical" claim above
   * is scoped to null-free arrays.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): its loop is
+  * generated inline over the input arrays, with no method call per row.
   */
 case class RotateVector(child: Expression, weights: Array[Array[Double]])
     extends UnaryExpression with ExpectsInputTypes {

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,41 +20,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * spec-pinned row-local twin of `split(lower(trim(text)), "\\s+")`),
   * build each shingle with the same single-space join concat_ws
   * produces, count distinct in a hash set — O(total shingle chars) per
-  * row, one static call inside whole-stage codegen (the DHash63 /
-  * MultiPatternCounts convention). ShingleStatsSpec pins bit-equality
-  * to the replaced spelling on the real corpus and edge shapes.
+  * row, one [[StaticCall]] inside whole-stage codegen. ShingleStatsSpec
+  * pins bit-equality to the replaced spelling on the real corpus and edge
+  * shapes.
   */
-case class ShingleStats(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1 && k <= 16, s"k in [1,16], got $k")
-
-  override def inputTypes = Seq(StringType)
-
-  override def dataType: DataType = StructType(Seq(
+object ShingleStats {
+  private val Stats = StructType(Seq(
     StructField("n_shingles", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false)))
 
-  override def prettyName: String = "shingle_stats"
-
-  override protected def nullSafeEval(t: Any): Any =
-    ShingleStats.statsRow(t.asInstanceOf[UTF8String].toString, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleStats.statsRow($c.toString(), $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleStats =
-    copy(child = newChild)
-}
-
-object ShingleStats {
-  def apply(t: Column, k: Int): Column =
-    GraftColumnBridge.column(ShingleStats(GraftColumnBridge.expression(t), k))
+  def apply(t: Column, k: Int): Column = {
+    require(k >= 1 && k <= 16, s"k in [1,16], got $k")
+    StaticCall(this, "statsRow", "shingle_stats", Stats, t, StringType, k)
+  }
 
   /** The walk — static so generated code calls it directly. */
-  def statsRow(text: String, k: Int): InternalRow = {
-    val tk = HashFunctions.tokensLocal(text)
+  def statsRow(text: UTF8String, k: Int): InternalRow = {
+    val tk = HashFunctions.tokensLocal(text.toString)
     val n = math.max(tk.length - (k - 1), 0)
     val seen = new java.util.HashSet[String](math.max(16, n * 2))
     val sb = new java.lang.StringBuilder

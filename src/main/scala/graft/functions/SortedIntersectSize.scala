@@ -12,6 +12,9 @@ import org.apache.spark.sql.types._
   * dominates set-similarity joins with hundreds of thousands of pairs.
   * Caller contract: both arrays ascending + distinct (sort_array over
   * array_distinct).
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): its loop is
+  * generated inline over the input arrays, with no method call per row.
   */
 case class SortedIntersectSize(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -23,6 +23,9 @@ import org.apache.spark.sql.types._
   * in malformed arrays read as 0.0 where the HOF spelling would have
   * propagated NULL. The bit-identical claim is scoped to null-free
   * arrays.
+  *
+  * Keeps hand-written codegen (not a [[StaticCall]]): its loop is
+  * generated inline over the input arrays, with no method call per row.
   */
 case class SquaredDistance(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

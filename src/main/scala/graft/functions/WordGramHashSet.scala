@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,33 +19,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * spellings; WordGramHashSetSpec additionally pins this expression
   * against the relational pipeline end to end.
   */
-case class WordGramHashSet(child: Expression, n: Int, md5: Boolean)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(n >= 1 && n <= 64, s"n in [1,64], got $n")
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "word_gram_hash_set"
-
-  override protected def nullSafeEval(t: Any): Any =
-    WordGramHashSet.hashes(t.asInstanceOf[UTF8String].toString, n, md5)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordGramHashSet.hashes($c.toString(), $n, $md5);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramHashSet =
-    copy(child = newChild)
-}
-
 object WordGramHashSet {
-  def apply(t: Column, n: Int, md5: Boolean): Column =
-    GraftColumnBridge.column(
-      WordGramHashSet(GraftColumnBridge.expression(t), n, md5))
+  def apply(t: Column, n: Int, md5: Boolean): Column = {
+    require(n >= 1 && n <= 64, s"n in [1,64], got $n")
+    StaticCall(this, "hashes", "word_gram_hash_set",
+      ArrayType(LongType, containsNull = false), t, StringType, n, md5)
+  }
 
   /** The walk — static so generated code calls it directly. */
-  def hashes(text: String, n: Int, md5: Boolean): GenericArrayData = {
+  def hashes(t: UTF8String, n: Int, md5: Boolean): GenericArrayData = {
+    val text = t.toString
     if (!md5) return new GenericArrayData(
       graft.operators.Dedup.wordGramHashesLocal(text, n))
     val tk = HashFunctions.tokensLocal(text)

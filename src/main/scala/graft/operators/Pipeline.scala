@@ -1385,6 +1385,10 @@ object Pipeline {
       // it is written: without it Catalyst pushed the h_bits/n_words
       // predicate below the join, re-running the extraction over every
       // corpus row instead of the ~survivor set.
+      // GUARD: Opaque blocks EVERY predicate pushdown through this
+      // projection, not just h_bits/n_words: a filter later placed above
+      // it (even on doc_id) silently stops pushing. OpaqueGuardSpec pins
+      // the h_bits/n_words filter above the keep-join.
       val minIds = docs.select(col("doc_id"), canon.as("canon_url"))
         .groupBy(col("canon_url")).agg(min(col("doc_id")).as("doc_id"))
       val xt = graft.functions.Opaque(T.htmlToText(T.fixtureHtml))

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
@@ -15,7 +16,8 @@ import graft.SparkSpec
 /** Property test of the embedded nibbler's contract under concurrency:
   * two producers push random-sized runs into one nibbler with a random
   * `size` and `receiverCapacity`, while the processor fails on some slices,
-  * with `resumeAfterErr` on or off.
+  * with `resumeAfterErr` on or off. Some cases call `stop()` while the
+  * producers are still pushing.
   */
 class NibblerConcurrencySpec extends SparkSpec {
   import spark.implicits._
@@ -31,18 +33,22 @@ class NibblerConcurrencySpec extends SparkSpec {
     failEvery <- Gen.option(Gen.choose(5, 60))
     resume <- Gen.oneOf(true, false)
     tickMs <- Gen.choose(20, 200)
-  } yield Case(size, capacity, runs, failEvery, resume, tickMs)
+    stopAfterMs <- Gen.option(Gen.choose(0, 100))
+  } yield Case(size, capacity, runs, failEvery, resume, tickMs, stopAfterMs)
 
   /** What the processor and `onError` saw, in the order they saw it. */
   private final case class Event(ok: Boolean, slice: Seq[Long])
 
   private def run(c: Case): Prop = {
     val events = new ConcurrentLinkedQueue[Event]()
+    val starts = new ConcurrentLinkedQueue[java.lang.Long]()
+    val producerErrors = new ConcurrentLinkedQueue[Throwable]()
     // a slice fails when it holds an item whose index is a multiple of failEvery
     def poisoned(slice: Seq[Long]) =
       c.failEvery.exists(k => slice.exists(i => (i % Stride) % k == k - 1))
     val nib = Nibbler.start(spark, NibblerConfig[Long](
       processor = (_, slice) => {
+        starts.add(System.nanoTime())
         if (poisoned(slice)) throw new IllegalStateException("injected")
         events.add(Event(ok = true, slice)); ()
       },
@@ -58,12 +64,25 @@ class NibblerConcurrencySpec extends SparkSpec {
         try sizes.foreach { n =>
           nib.pushAll((next until next + n).map(p * Stride + _))
           next += n
-        } catch { case _: Nibbler.ReceiverClosedException => () }
+        } catch {
+          case _: Nibbler.ReceiverClosedException => ()
+          case NonFatal(e) => producerErrors.add(e)
+        }
       }, s"producer-$p")
     }
     producers.foreach(_.start())
-    producers.foreach(_.join())
-    nib.stop()
+    val stoppedAt = c.stopAfterMs match {
+      case Some(ms) =>
+        Thread.sleep(ms)
+        nib.stop()
+        val t = System.nanoTime()
+        producers.foreach(_.join())
+        t
+      case None =>
+        producers.foreach(_.join())
+        nib.stop()
+        System.nanoTime()
+    }
 
     val seen = events.asScala.toVector
     val delivered = seen.flatMap(_.slice)
@@ -74,8 +93,12 @@ class NibblerConcurrencySpec extends SparkSpec {
     Prop.all(
       // each producer's items arrive once each, in push order, with no gap
       perProducer.forall(got => got == (0L until got.length)) :| "order kept, at most once",
-      // with nothing stopping the nibbler, every pushed item arrives
-      (stoppedByFailure || perProducer.map(_.length.toLong) == pushed) :| "every item exactly once",
+      // with nothing stopping the nibbler, every pushed item arrives; items
+      // pushed while stop() runs may be dropped
+      (stoppedByFailure || c.stopAfterMs.isDefined || perProducer.map(_.length.toLong) == pushed) :|
+        "every item exactly once",
+      producerErrors.isEmpty :| s"producers end by finishing or ReceiverClosedException: $producerErrors",
+      starts.asScala.forall(_ <= stoppedAt) :| "no processor invocation starts after stop() returns",
       seen.forall(_.slice.length <= c.size) :| "no slice larger than size",
       // a non-resumable failure is the last thing the nibbler processes
       (!stoppedByFailure || (failures == 1 && !seen.last.ok)) :| "nothing after a stopping failure"
@@ -94,7 +117,10 @@ class NibblerConcurrencySpec extends SparkSpec {
 }
 
 object NibblerConcurrencySpec {
-  /** One randomized run: `runs(p)` are producer p's pushAll sizes. */
+  /** One randomized run: `runs(p)` are producer p's pushAll sizes; when
+    * `stopAfterMs` is set, `stop()` is called that long after the
+    * producers start, without waiting for them.
+    */
   final case class Case(size: Int, capacity: Int, runs: List[List[Int]],
-      failEvery: Option[Int], resume: Boolean, tickMs: Int)
+      failEvery: Option[Int], resume: Boolean, tickMs: Int, stopAfterMs: Option[Int])
 }
