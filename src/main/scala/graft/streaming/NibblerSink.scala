@@ -12,11 +12,14 @@ import org.apache.spark.storage.StorageLevel
   * driver.
   *
   * The ticker is the processing-time trigger; "batch full" is detected by
-  * counting the micro-batch (cheap: the batch is persisted before the count
-  * so the processor's pass doesn't rescan the source). The processor
-  * receives the whole micro-batch as a Dataset, so its work (writes to a
-  * sink, bulk upserts — the reference README's "bulk insert" use case)
-  * runs distributed on executors.
+  * counting the micro-batch. The batch is persisted first, and the count
+  * runs over its cached plan (a bare in-memory scan with no exchange), so
+  * classifying the batch costs one Spark job that scans the source once,
+  * fills the cache and returns the row count; the processor's passes then
+  * read the loaded cache. The processor receives the whole micro-batch as
+  * a Dataset, so its work (writes to a sink, bulk upserts — the reference
+  * README's "bulk insert" use case) runs distributed on executors. The
+  * cache is released when the processor returns or fails.
   *
   * Error semantics mirror the reference (nibbler.go:137-149): processor
   * exceptions route to `onError` with the failed batch; `resumeAfterErr`
@@ -86,7 +89,10 @@ object NibblerSink {
       .foreachBatch { (batch: Dataset[T], batchId: Long) =>
         batch.persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          val n = batch.count()
+          // over the persisted plan this is one job that fills the cache;
+          // Dataset.count() would plan an aggregate whose AQE stages add
+          // a partial-count shuffle and a final stage
+          val n = batch.queryExecution.toRdd.count()
           if (n > 0) {
             val trigger =
               if (n >= cfg.size) Trigger.BatchFull else Trigger.Ticker

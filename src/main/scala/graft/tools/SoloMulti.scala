@@ -15,8 +15,9 @@ object SoloMulti {
         val df = fn(spark, sfDir)
         if (countAction) df.count()
         else df.write.format("noop").mode("overwrite").save()
+        val t = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
+        t
       }
       println(f"[solo] $name min=${ts.min}%.2f runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }

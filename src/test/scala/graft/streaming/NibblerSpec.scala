@@ -5,8 +5,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** Mirrors the reference's own test coverage (nibbler_test.go):
@@ -251,18 +249,7 @@ class NibblerSpec extends SparkSpec {
   test("the nibbler's query runs no Spark job") {
     // Pushed items stay on the driver: each micro-batch is a local relation
     // that the sink collects without a job, however many pushes it holds.
-    val queryJobs = new ConcurrentLinkedQueue[Int]() // jobs the query started
-    val listenerCaughtUp = new CountDownLatch(1)
-    @volatile var queryId: String = null
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (queryId != null && p.getProperty("sql.streaming.queryId") == queryId)
-            queryJobs.add(e.jobId)
-          if (p.getProperty("graft.test.marker") != null) listenerCaughtUp.countDown()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val queryJobs = new QueryJobs(spark)
     val got = new ConcurrentLinkedQueue[Int]()
     val before = spark.streams.active.map(_.id).toSet
     val nib = Nibbler.start(spark, NibblerConfig[Int](
@@ -272,7 +259,8 @@ class NibblerSpec extends SparkSpec {
       tickerDuration = 1.hour,
       processingTimeout = 5.seconds))
     val query = spark.streams.active.find(q => !before(q.id) && q.name.startsWith("nibbler-")).get
-    queryId = query.id.toString
+    queryJobs.queryId = query.id.toString
+    var jobs = Map.empty[Long, Int]
     try {
       for (round <- 0 until 5) {
         (1 to 40).foreach(i => nib.push(round * 40 + i))
@@ -280,19 +268,13 @@ class NibblerSpec extends SparkSpec {
       }
     } finally {
       nib.stop()
-      // the listener bus delivers in order: once a later job is seen,
-      // every job of the nibbler's query has been counted
-      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
-      assert(listenerCaughtUp.await(10, TimeUnit.SECONDS))
-      spark.sparkContext.removeSparkListener(listener)
+      jobs = queryJobs.finish()
     }
     assert(got.asScala.toVector == (1 to 200).toVector)
     val microBatches = query.recentProgress.count(_.numInputRows > 0)
-    info(s"$microBatches micro-batches for 200 pushes; jobs: ${queryJobs.asScala.toVector}")
+    info(s"$microBatches micro-batches for 200 pushes; jobs by batch: $jobs")
     assert(microBatches > 0 && microBatches < 200, "pushes should share micro-batches")
-    assert(queryJobs.isEmpty, s"the nibbler's query ran jobs ${queryJobs.asScala.toVector}")
+    assert(jobs.isEmpty, s"the nibbler's query ran jobs $jobs")
   }
 
   test("receiver backpressure: a producer pushing capacity+1 items blocks until the query drains") {
