@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -20,10 +20,11 @@ import java.nio.file.{Files, Paths}
   *     N runs no longer discards the valid timings; the negative marker is
   *     reserved for queries that failed in EVERY run);
   *   - EVERY run's time for EVERY query is written to BENCH_DETAIL.json in
-  *     the working directory, so a contended run carries its own
-  *     evidence — a high min with a tight run vector is a regression, a
-  *     high min inside a wide vector is load. (Round 9 lesson: variance
-  *     evidence lives ONLY here — an "hv" section on the stdout line
+  *     the working directory and to BENCH_DETAIL_c<cores>.json, which a
+  *     run at another core count leaves alone, so a contended run carries
+  *     its own evidence — a high min with a tight run vector is a
+  *     regression, a high min inside a wide vector is load. (Round 9
+  *     lesson: variance evidence lives ONLY here — an "hv" section on the stdout line
   *     overflowed the driver's ~2000-char capture window at 162 queries
   *     and made the whole line unparseable.)
   *
@@ -39,6 +40,12 @@ object Bench {
     if (dec == 0) math.round(r).toString else r.toString
   }
 
+  /** The one result-line template both renderers fill. */
+  private def resultLine(total: Double, nFailed: Int, qs: String, sfName: String): String =
+    s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","failed":$nFailed,"queries":$qs,"sf":"$sfName"}"""
+
+  private def total(results: Seq[(String, Double)]): Double = results.map(_._2).filter(_ >= 0).sum
+
   /** The FULL result line — every query at centisecond precision under
     * its full name, no size budget. Written to SPARK_GRAFT_BENCH_OUT
     * (a file has no capture-window limit), restoring the per-query
@@ -48,10 +55,9 @@ object Bench {
     */
   private[graft] def renderFullLine(results: Seq[(String, Double)], nFailed: Int,
       sfName: String): String = {
-    val total = results.map(_._2).filter(_ >= 0).sum
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","failed":$nFailed,"queries":$qs,"sf":"$sfName"}"""
+    resultLine(total(results), nFailed, qs, sfName)
   }
 
   /** Render the one stdout JSON line under a HARD size budget (the
@@ -68,9 +74,7 @@ object Bench {
     val collides = results.map(_._1).groupBy(short)
       .collect { case (_, v) if v.size > 1 => v }.flatten.toSet
     def key(n: String): String = if (collides(n)) n else short(n)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    def line(qs: String): String =
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","failed":$nFailed,"queries":$qs,"sf":"$sfName"}"""
+    def line(qs: String): String = resultLine(total(results), nFailed, qs, sfName)
     def qsAt(dec: Int): String = results
       .map { case (k, v) => "\"" + key(k) + "\":" + fmt(v, dec) }
       .mkString("{", ",", "}")
@@ -79,59 +83,60 @@ object Bench {
       .getOrElse(line("\"BENCH_DETAIL.json\""))
   }
 
+  // View-backed queries read a memoized materialized artifact, which
+  // would reduce their warm run to a checkpoint scan and hide any
+  // regression in the build they stand for. Before EACH timed run,
+  // drop exactly the artifact that query is responsible for building:
+  // d2's line then measures the minhash+LSH+verify build (warm), d6's
+  // the connected-components build over a staged pair graph, and d7
+  // stays the pure read-the-staged-clusters line — the production
+  // pipeline's three cost classes, each visible.
+  private[graft] val rebuild: Map[String, () => Unit] = Map(
+    "d2_dedup_minhash_lsh" -> (() => graft.operators.Dedup.clearPairViews()),
+    "d6_dedup_clusters" -> (() => graft.operators.Dedup.clearClusterViews()))
+
+  /** Time one run of query `name` in seconds: the one timed action for
+    * the bench and every probe. The query's [[rebuild]] artifact is
+    * dropped before the clock starts; the frame is built and written to
+    * the NOOP SINK, which eagerly computes EVERY column of EVERY row
+    * (r16 verdict item 1 / guide §1.4: count() lets Catalyst prune
+    * columns and sometimes whole subtrees — q65's old tail elided its
+    * entire left-profile pass — so count-stamped floors certified work
+    * that never executed; the count-era numbers are kept in
+    * OPTIMIZATION_r17.md). A crashing query does NOT report its
+    * time-to-fail as a timing: the run is marked negative and logged to
+    * stderr. The elapsed time is read before `clearCache()`, which
+    * drops the small frames operators persist so later queries aren't
+    * taxed by leftover cached blocks.
+    */
+  def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Double = {
+    rebuild.get(name).foreach(_.apply())
+    val t0 = System.nanoTime()
+    val ok = try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      true
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        false
+    }
+    val dt = (System.nanoTime() - t0) / 1e9
+    spark.catalog.clearCache()
+    if (ok) dt else -dt
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val spark = GraftSession.local()
-    // View-backed queries read a memoized materialized artifact, which
-    // would reduce their warm run to a checkpoint scan and hide any
-    // regression in the build they stand for. Before EACH timed run,
-    // drop exactly the artifact that query is responsible for building:
-    // d2's line then measures the minhash+LSH+verify build (warm), d6's
-    // the connected-components build over a staged pair graph, and d7
-    // stays the pure read-the-staged-clusters line — the production
-    // pipeline's three cost classes, each visible.
-    val rebuild: Map[String, () => Unit] = Map(
-      "d2_dedup_minhash_lsh" -> (() => graft.operators.Dedup.clearPairViews()),
-      "d6_dedup_clusters" -> (() => graft.operators.Dedup.clearClusterViews()))
-    // Timed action (r16 verdict item 1 / guide §1.4): the NOOP SINK, which
-    // eagerly computes EVERY column of EVERY row — count() lets Catalyst
-    // prune columns and sometimes whole subtrees (q65's old tail elided its
-    // entire left-profile pass; q59's count excludes the window-sum
-    // arithmetic its consumers pay), so count-stamped floors certified work
-    // that never executed. All BASELINE.md floors are re-stamped on the
-    // noop action in the same commit as this switch; the old count-action
-    // numbers are kept in OPTIMIZATION_r17.md. SPARK_GRAFT_BENCH_ACTION=
-    // count preserves the old action for cross-methodology A/B runs.
-    val countAction = sys.env.get("SPARK_GRAFT_BENCH_ACTION").contains("count")
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      rebuild.get(name).foreach(_.apply())
-      val t0 = System.nanoTime()
-      // a crashing query must NOT report its time-to-fail as a legitimate
-      // timing: mark the run negative and log to stderr
-      val ok = try {
-        val df = fn(spark, sfDir)
-        if (countAction) df.count()
-        else df.write.format("noop").mode("overwrite").save()
-        true
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // operators persist small signature frames; drop them so later
-      // queries aren't taxed by leftover cached blocks
-      spark.catalog.clearCache()
-      if (ok) dt else -dt
-    }
     // benchQueries, not queries: entries whose driver-checkable frame
     // carries an exact gate leg (bounds-oracle, ANN recall floors) bench
     // their production spelling instead — the r10 advice's
     // cross-round-comparability point
     val names = SparkEntry.benchQueries.toSeq
     val passes: Seq[Map[String, Double]] =
-      (1 to nRuns).map { _ => names.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap }
+      (1 to nRuns).map { _ => names.map { case (n, fn) => n -> timeOnce(spark, sfDir, n, fn) }.toMap }
     val runsByName: Seq[(String, Seq[Double])] =
       names.map { case (n, _) => n -> passes.map(_(n)) }
     // min over successful runs when any exist; all-failed keeps a negative
@@ -170,9 +175,13 @@ object Bench {
       .map { case (n, ts) => "\"" + n + "\":[" + ts.map(fmt(_, 2)).mkString(",") + "]" }
       .mkString(s"""{"sf":"$sfName","passes":$nRuns,"runs":{""", ",", "}}")
     // the OUT file carries the FULL per-query map (no capture window to
-    // overflow); stdout keeps the budgeted line
+    // overflow); stdout keeps the budgeted line. The run vectors go to
+    // BENCH_DETAIL.json, whose name readers rely on, and to a per-core-count
+    // copy, so a run at one core count does not overwrite another's vectors.
     val fullJson = renderFullLine(results, nFailed, sfName)
-    (sys.env.get("SPARK_GRAFT_BENCH_OUT").map(_ -> fullJson).toSeq :+ ("BENCH_DETAIL.json" -> detail))
+    val perCores = s"BENCH_DETAIL_c${spark.sparkContext.defaultParallelism}.json"
+    (sys.env.get("SPARK_GRAFT_BENCH_OUT").map(_ -> fullJson).toSeq ++
+        Seq("BENCH_DETAIL.json" -> detail, perCores -> detail))
       .foreach { case (p, s) =>
         try Files.writeString(Paths.get(p), s)
         catch { case e: Exception =>
