@@ -96,19 +96,6 @@ object HashFunctions {
     */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** 5 x 13-bit band keys of a simhash — pigeonhole guarantee: any pair at
-    * hamming distance <= 4 differs in at most 4 bands, so it shares at
-    * least one exact band. Wide bands (8k values) keep the candidate
-    * join's bucket sizes small on skewed corpora; tighter thresholds with
-    * fewer, wider bands cut candidate volume superlinearly.
-    */
-  def simhashBands(sh: Column): Column =
-    array((0 until 5).map { b =>
-      val width = if (b == 4) 12 else 13
-      val mask = (1L << width) - 1
-      shiftright(sh, b * 13).bitwiseAND(mask).bitwiseOR(lit(b.toLong << 16))
-    }: _*)
-
   /** 56-bit cross-engine token hash: the first 14 hex chars of md5,
     * parsed as an integer — the one >= 56-bit hash both Spark
     * (conv(hex, 16, 10)) and DuckDB (('0x' || hex)::BIGINT) compute

@@ -213,7 +213,7 @@ object Dedup {
   // semantics: built once per (session, table dir, threshold) and reused
   // by every downstream query — exactly how a production cleaning
   // pipeline would stage them (dedup artifacts are written once and read
-  // by many consumers). Materialization is an EAGER localCheckpoint, not
+  // by many consumers). Materialization is an EAGER checkpoint, not
   // persist(): the slim result lands in RDD block storage, which the
   // blanket spark.catalog.clearCache() that Bench/Verify run between
   // queries does NOT clear (that clears only the SQL cache manager), so
@@ -248,23 +248,26 @@ object Dedup {
     * built once per (session, dir, threshold), checkpoint-materialized.
     */
   def nearDupPairsView(s: SparkSession, dir: String, minJaccard: Double = 0.8): DataFrame =
-    pairViewCache.computeIfAbsent((s, dir, minJaccard), { _ =>
+    view(pairViewCache, (s, dir, minJaccard)) {
       val stats = docMinhashStats(Tables.documents(s, dir))
-      val pairs = nearDupPairsFrom(stats, minJaccard).localCheckpoint() // eager
-      stats.unpersist()
-      pairs
-    })
+      Materialize(nearDupPairsFrom(stats, minJaccard), stats)
+    }
 
   /** Connected-component cluster assignment over [[nearDupPairsView]] —
     * the iterative CC run executes at most once per (session, dir,
     * threshold); d6 and d7 both read this one frame.
     */
   def nearDupClustersView(s: SparkSession, dir: String, minJaccard: Double = 0.8): DataFrame =
-    clusterViewCache.computeIfAbsent((s, dir, minJaccard), { _ =>
-      connectedComponents(
-        nearDupPairsView(s, dir, minJaccard).select(col("doc_a"), col("doc_b")))
-        .localCheckpoint() // eager
-    })
+    view(clusterViewCache, (s, dir, minJaccard)) {
+      Materialize(connectedComponents(
+        nearDupPairsView(s, dir, minJaccard).select(col("doc_a"), col("doc_b"))))
+    }
+
+  // A frame built under Materialize.planOnly is lazy: it never enters a
+  // view cache, where a later production call would get it
+  private def view(cache: java.util.Map[(SparkSession, String, Double), DataFrame],
+      key: (SparkSession, String, Double))(build: => DataFrame): DataFrame =
+    if (Materialize.isPlanOnly) build else cache.computeIfAbsent(key, _ => build)
 
   /** Drop every memoized view reference (tests / long-lived sessions
     * switching corpora, or after rewriting a dir's tables in-session).
@@ -342,41 +345,8 @@ object Dedup {
 
   def ngramJaccardBucketed(docs: DataFrame, t: Double = 0.62): DataFrame = {
     val gAgg = gramAgg(docs).persist()
-    materializeAndRelease(ngramJaccardBucketedFrom(docs, gAgg, t), gAgg)
-  }
-
-  /** The bm25TopK release idiom (r12 advice): eagerly materialize the
-    * BOUNDED pair output (near-dup pairs above threshold — the
-    * audit-report size class, never corpus-quadratic) so the
-    * corpus-sized gram-aggregate cache can be unpersisted before
-    * returning. Without this a library caller invoking the jaccard
-    * family repeatedly accumulates one cached gram aggregate per call
-    * (Bench/Verify masked it by clearing the catalog cache between
-    * queries). PlanAudit sweeps audit the lazy spellings via lazyTwin.
-    */
-  private def materializeAndRelease(pairs: DataFrame, gAgg: DataFrame): DataFrame = {
-    // Execution order matters twice here (the r13 mid-round bench
-    // flagged d3 at 1.7x over floor and this is where the 2 s went):
-    // (1) materialize the UNSORTED pairs — a global orderBy under
-    // full-row materialization pays the range partitioner's SAMPLING
-    // pass, which re-executes the whole candidate join (count() elides
-    // sorts, so the pre-advice lazy spelling never paid it); the bounded
-    // result is sorted AFTER, reading the cache. (2) materialize through
-    // persist+count first — Dataset.localCheckpoint plans via .rdd,
-    // which misses AQE's runtime broadcast (measured 2x: sort-merge
-    // where count() got a broadcast probe); checkpointing the CACHED
-    // partitions afterwards is a copy, and both caches release before
-    // returning (the advice's no-leak contract holds: the returned frame
-    // scans GC-reclaimed checkpoint blocks, nothing stays pinned).
-    val cached = pairs.persist()
-    // try/finally so the no-leak contract holds on the FAILURE path too:
-    // if count()/localCheckpoint throws (OOM, task failure), the pairs
-    // cache and the corpus-sized gram-aggregate persist must still
-    // release instead of staying pinned for the session.
-    val out =
-      try { cached.count(); cached.localCheckpoint(true) }
-      finally { gAgg.unpersist(); cached.unpersist() }
-    out.orderBy(col("doc_a"), col("doc_b"))
+    Materialize(ngramJaccardBucketedFrom(docs, gAgg, t), gAgg)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   private def ngramJaccardBucketedFrom(docs: DataFrame, gAgg: DataFrame,
@@ -455,14 +425,6 @@ object Dedup {
   val SaturationFrac = 0.01
 
   def ngramJaccardAuto(docs: DataFrame, t: Double = 0.62): DataFrame = {
-    val (pairs, gAgg) = ngramJaccardAutoLazy(docs, t)
-    materializeAndRelease(pairs, gAgg)
-  }
-
-  /** [[ngramJaccardAuto]]'s lazy plan plus the shared persisted gram
-    * aggregate — the PlanAudit twin and the release seam.
-    */
-  def ngramJaccardAutoLazy(docs: DataFrame, t: Double = 0.62): (DataFrame, DataFrame) = {
     // ONE persisted gram aggregate feeds the stats AND the chosen
     // spelling (and, on the prefix path, the df frame is reused as the
     // prefix index input) — the selector's marginal cost is one cached
@@ -473,7 +435,14 @@ object Dedup {
     val pairs =
       if (pickPrefixFilter(medianDf, nDocs)) ngramJaccardPrefixFilteredFrom(docs, gAgg, dfG, t)
       else ngramJaccardBucketedFrom(docs, gAgg, t)
-    (pairs, gAgg)
+    // The pair output is BOUNDED (near-dup pairs above threshold, never
+    // corpus-quadratic), so materialize it and release the corpus-sized
+    // gram aggregate before returning (the r12 advice's no-leak
+    // contract). Materialize the UNSORTED pairs and sort after: a global
+    // orderBy under full-row materialization pays the range
+    // partitioner's sampling pass, which re-executes the whole candidate
+    // join (the r13 bench's 2 s on d3).
+    Materialize(pairs, gAgg).orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** The selector predicate, exposed so the spec pins each regime. */
@@ -524,8 +493,8 @@ object Dedup {
     */
   def ngramJaccardPrefixFiltered(docs: DataFrame, t: Double = 0.62): DataFrame = {
     val gAgg = gramAgg(docs).persist()
-    materializeAndRelease(
-      ngramJaccardPrefixFilteredFrom(docs, gAgg, gramDf(gAgg), t), gAgg)
+    Materialize(ngramJaccardPrefixFilteredFrom(docs, gAgg, gramDf(gAgg), t), gAgg)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   private def ngramJaccardPrefixFilteredFrom(docs: DataFrame, gAgg: DataFrame,

@@ -429,17 +429,6 @@ object Multimodal {
              ELSE GREATEST((n * out_w * out_h) // (in_w * in_h), 1) END AS out_bytes
       FROM o ORDER BY doc_id"""))
 
-  /** "Luma" sample p (0..71) of a payload rendered as text: the codepoint
-    * at the p-th of 72 evenly spaced character positions. This is m6's
-    * declared decode stub — a real image pipeline swaps this one column
-    * for the mean-pooled gray cell of a decoded 9x8 thumbnail; the dHash
-    * packing and the banded join below are unchanged.
-    */
-  private def lumaAt(text: Column, p: Int): Column = {
-    val pos = floor((lit(p) * (length(text) - lit(1))) / lit(71.0)).cast("int") + lit(1)
-    ascii(text.substr(pos, lit(1)))
-  }
-
   /** F6 core — perceptual dHash: 8 rows x 9 samples, each bit compares
     * horizontally adjacent "pixels" (sample r*9+c+1 > sample r*9+c),
     * packed little-endian into bits 0..62 (bit 63 is dropped so the hash

@@ -1527,26 +1527,9 @@ object Pipeline {
     * lazy plan nests them — no checkpoints, no driver round-trips.
     */
   def domainPageRank(pages: DataFrame, iters: Int = 3): DataFrame =
-    // Host-proportional and bounded, so eagerly materialize the edge
-    // list ONCE (the d3/bm25 cache-release idiom): one corpus scan feeds
-    // all `iters` rounds + the degree/out-sum frames, and nothing
-    // corpus-sized stays cached after the call (localCheckpoint blocks
-    // are GC-reclaimed). PlanAudit audits the lazy spelling via
-    // [[domainPageRankLazy]] (the lazyTwin convention).
-    domainPageRankFrom(hostGraph(pages).localCheckpoint(true), iters)
-
-  /** The fully lazy spelling (edges re-derived per consumer) — audit
-    * surface only; production calls pay one scan via [[domainPageRank]].
-    */
-  def domainPageRankLazy(pages: DataFrame, iters: Int = 3): DataFrame =
-    domainPageRankFrom(hostGraph(pages), iters)
-
-  private def domainPageRankFrom(edges: DataFrame, iters: Int): DataFrame = {
-    val nodes = edges.select(col("src").as("host"))
-      .unionByName(edges.select(col("dst").as("host"))).distinct()
-      .select(col("host"), lit(1.0).as("init"), lit(0.15).as("add"))
-    rankIterate(edges, nodes, iters)
-  }
+    // Host-proportional and bounded, so materialize the edge list ONCE:
+    // one corpus scan feeds all `iters` rounds + the degree/out-sum frames
+    domainPageRankFromEdges(Materialize(hostGraph(pages)), iters)
 
   /** Shared seeded-damping power iteration over a host edge list (the
     * P23/P24 core): nodes carry their init score and their per-round
@@ -1600,24 +1583,7 @@ object Pipeline {
     */
   def domainTrustRank(pages: DataFrame, seeds: Seq[String], iters: Int = 3): DataFrame = {
     require(seeds.nonEmpty, "domainTrustRank: empty seed set")
-    val edges = hostGraph(pages).localCheckpoint(true)
-    trustRankFrom(edges, seeds, iters)
-  }
-
-  /** Fully lazy spelling — audit surface only (the lazyTwin convention). */
-  def domainTrustRankLazy(pages: DataFrame, seeds: Seq[String], iters: Int = 3): DataFrame =
-    trustRankFrom(hostGraph(pages), seeds, iters)
-
-  private def trustRankFrom(edges: DataFrame, seeds: Seq[String], iters: Int): DataFrame = {
-    val dv = when(col("host").isin(seeds: _*),
-      lit(1.0) / lit(seeds.size.toDouble)).otherwise(lit(0.0))
-    val nodes = edges.select(col("src").as("host"))
-      .unionByName(edges.select(col("dst").as("host"))).distinct()
-      .select(col("host"), dv.as("init"), (lit(0.15) * dv).as("add"))
-    rankIterate(edges, nodes, iters)
-      .select(col("host"), col("host").isin(seeds: _*).as("is_seed"),
-        col("n_in_hosts"), col("n_out_hosts"), col("score"))
-      .orderBy(col("host"))
+    domainTrustRankFromEdges(Materialize(hostGraph(pages)), seeds, iters)
   }
 
   // P23 — domain PageRank (round 13): the governance artifact ABOVE
@@ -1723,12 +1689,25 @@ object Pipeline {
   /** Rank directly from a published (or otherwise materialized) edge
     * list — the production read path: no corpus scan, no checkpoint.
     */
-  def domainPageRankFromEdges(edges: DataFrame, iters: Int = 3): DataFrame =
-    domainPageRankFrom(edges, iters)
+  def domainPageRankFromEdges(edges: DataFrame, iters: Int = 3): DataFrame = {
+    val nodes = edges.select(col("src").as("host"))
+      .unionByName(edges.select(col("dst").as("host"))).distinct()
+      .select(col("host"), lit(1.0).as("init"), lit(0.15).as("add"))
+    rankIterate(edges, nodes, iters)
+  }
 
   def domainTrustRankFromEdges(edges: DataFrame, seeds: Seq[String],
-      iters: Int = 3): DataFrame =
-    trustRankFrom(edges, seeds, iters)
+      iters: Int = 3): DataFrame = {
+    val dv = when(col("host").isin(seeds: _*),
+      lit(1.0) / lit(seeds.size.toDouble)).otherwise(lit(0.0))
+    val nodes = edges.select(col("src").as("host"))
+      .unionByName(edges.select(col("dst").as("host"))).distinct()
+      .select(col("host"), dv.as("init"), (lit(0.15) * dv).as("add"))
+    rankIterate(edges, nodes, iters)
+      .select(col("host"), col("host").isin(seeds: _*).as("is_seed"),
+        col("n_in_hosts"), col("n_out_hosts"), col("score"))
+      .orderBy(col("host"))
+  }
 
   /** P30's core: DOMAIN HITS (Kleinberg 1999, "Authoritative Sources in
     * a Hyperlinked Environment") over the same [[hostGraph]] artifact —
@@ -1754,17 +1733,10 @@ object Pipeline {
     * adjudicated class.
     */
   def domainHits(pages: DataFrame, iters: Int = 2): DataFrame =
-    hitsFrom(hostGraph(pages).localCheckpoint(true), iters)
-
-  /** Fully lazy spelling — audit surface only (the lazyTwin convention). */
-  def domainHitsLazy(pages: DataFrame, iters: Int = 2): DataFrame =
-    hitsFrom(hostGraph(pages), iters)
+    domainHitsFromEdges(Materialize(hostGraph(pages)), iters)
 
   /** HITS from a published edge list — the P25 read path. */
-  def domainHitsFromEdges(edges: DataFrame, iters: Int = 2): DataFrame =
-    hitsFrom(edges, iters)
-
-  private def hitsFrom(edges: DataFrame, iters: Int): DataFrame = {
+  def domainHitsFromEdges(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 4,
       s"iters in [1,4] (lazy plan nests them), got $iters")
     val nodes = edges.select(col("src").as("host"))
@@ -1796,7 +1768,7 @@ object Pipeline {
     // idiom) — the max-normalizer and the output otherwise each replay
     // the whole nested iteration ladder (the before plan carried ~130
     // Exchanges for a 2-iteration HITS on a 50-node graph)
-    val scores = auth.join(hub, Seq("host")).localCheckpoint(true)
+    val scores = Materialize(auth.join(hub, Seq("host")))
     val mx = scores.agg(max(col("a")).as("ma"), max(col("h")).as("mh"))
     scores
       .crossJoin(broadcast(mx))
@@ -1892,15 +1864,14 @@ object Pipeline {
       val pages = docs.select(col("doc_id"), T.fixtureDirtyUrl.as("url"),
         T.fixtureLinkedHtml.as("html"))
       // r17: materialize the HOST-bounded rank table once (the edge-list
-      // localCheckpoint idiom one level up). The systematic sampler
+      // materialization one level up). The systematic sampler
       // below reads its input three times (w_total + bucket offsets +
       // within-bucket cum), and each read replayed the full lazy
       // 3-iteration rank plan — ~146 Exchanges in the before plan,
       // ~46 after (plans/r17/p26_*). Host-proportional, never
       // corpus-sized, so the materialization is as bounded as the
       // edge list's.
-      val ranks = domainPageRank(pages).select(col("host"), col("score"))
-        .localCheckpoint(true)
+      val ranks = Materialize(domainPageRank(pages).select(col("host"), col("score")))
       val withW = docs
         .select(col("doc_id"), col("lang"),
           T.hostOf(T.canonicalizeUrl(T.fixtureDirtyUrl)).as("host"))
@@ -2238,7 +2209,7 @@ object Pipeline {
     * plan — the query a real corpus build runs nightly, and the
     * strongest whole-plan-shape witness in the pack: every stage is the
     * stand-alone operator's code, chained over STAGED ARTIFACTS
-    * (localCheckpoint per stage — each stage materializes once and
+    * (one Materialize per stage — each stage materializes once and
     * feeds BOTH its card row and the next stage, never re-tokenized per
     * consumer; a cluster deployment writes each to parquet, same
     * contract). Output is the stage-by-stage corpus card (p5's shape):
@@ -2267,7 +2238,7 @@ object Pipeline {
         col("lang"), col("source"))
     val bench = docsAll.filter(col("doc_id") % 20 === 0)
       .select(col("doc_id"), col("text"))
-    def stage(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def stage(df: DataFrame): DataFrame = Materialize(df)
     val s0 = stage(docsAll.filter(col("doc_id") % 20 =!= 0))
     // 1 — d14 governance on the corpus slice (url/domain fixture shapes)
     val keep1 = Dedup.domainGovernance(

@@ -493,13 +493,12 @@ object Relational {
       // n_lines/sum_qty roll up as exact integer/decimal partial sums,
       // so every value is bit-identical to the expanded spelling). The
       // grain frame is customer-proportional (never join-output-sized);
-      // localCheckpoint materializes it once for the three readers (the
-      // d3 bounded-materialization idiom, one tier up in size).
-      val grain = Tables.orders(s, d)
+      // materialized once for the three readers (the d3 bounded-
+      // materialization idiom, one tier up in size).
+      val grain = Materialize(Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderstatus"), col("l_returnflag"), col("o_custkey"))
-        .agg(count(lit(1)).as("n"), sum(dec(col("l_quantity"))).as("q"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("n"), sum(dec(col("l_quantity"))).as("q")))
       def gs(keys: Seq[String]) = grain
         .groupBy(keys.map(col): _*)
         .agg(count_distinct(col("o_custkey")).as("n_custs"),
@@ -925,15 +924,14 @@ object Relational {
       // associative, so every rolled-up value is bit-identical to the
       // direct cube (money() rounds once, at the end, per level — the
       // same single round the old spelling applied). The base frame is
-      // enum-bounded (|returnflag| x |linestatus|), hence the eager
-      // localCheckpoint (the bounded-frame idiom); grouping() flags
-      // become per-level literals.
-      val base = Tables.lineitem(s, d)
+      // enum-bounded (|returnflag| x |linestatus|), hence materialized
+      // once (the bounded-frame idiom); grouping() flags become
+      // per-level literals.
+      val base = Materialize(Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(dec(col("l_quantity"))).as("q"),
           sum(dec(col("l_extendedprice"))).as("p"),
-          count(lit(1)).as("n"))
-        .localCheckpoint(true)
+          count(lit(1)).as("n")))
       def lvl(df: DataFrame, gRf: Int, gLs: Int) = df.select(
         (if (gRf == 0) col("l_returnflag") else lit(null).cast("string")).as("l_returnflag"),
         (if (gLs == 0) col("l_linestatus") else lit(null).cast("string")).as("l_linestatus"),
@@ -2123,12 +2121,6 @@ object Relational {
     // windows) holds at most two user-count-sized states, not all of
     // them (the r11 advice's leak note — the loop is now <= maxWindows
     // iterations by the re-span clamp above, for ANY caller span)
-    def releaseCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
     var state: DataFrame = null
     windows.foreach { wid =>
       val cur = shards.filter(col("w") === wid)
@@ -2147,7 +2139,7 @@ object Relational {
                 .when(col("s").isNull, foldSeed(col("xs")))
                 .otherwise(foldCont(col("s"), col("xs"))).as("s"))
       state = state.localCheckpoint(true)
-      if (prev != null) releaseCheckpoint(prev)
+      if (prev != null) Materialize.release(prev)
     }
     shards.unpersist()
     state.select(col("user_id"), col("n_events"), Num.r4(col("s")).as("ewma"))
@@ -4206,18 +4198,11 @@ object Relational {
     // r17: the residual frame feeds TWO consumers (the fence aggregate
     // and the gate join), and the lazy spelling re-ran the whole
     // decomposition (3 windows + 2 aggregates + 2 joins) for each.
-    // Materialize it once — persist + count + checkpoint-from-cache +
-    // release, the d3 materializeAndRelease discipline (checkpointing
-    // an uncached plan goes through .rdd and loses AQE's runtime
-    // broadcasts). Production reads the decomposition as a published
-    // artifact anyway (the B68 convention); this keeps the correctness
-    // witness one-pass.
-    val lazyDec = tsSeasonalDecompose(events, period)
-      .select(col("user_id"), col("resid"))
-    val cached = lazyDec.persist()
-    val dec =
-      try { cached.count(); cached.localCheckpoint(true) }
-      finally { cached.unpersist() }
+    // Materialize it once. Production reads the decomposition as a
+    // published artifact anyway (the B68 convention); this keeps the
+    // correctness witness one-pass.
+    val dec = Materialize(tsSeasonalDecompose(events, period)
+      .select(col("user_id"), col("resid")))
     val f = dec.groupBy(col("user_id"))
       .agg(expr("percentile(resid, 0.25)").as("q1"),
         expr("percentile(resid, 0.75)").as("q3"),

@@ -1696,25 +1696,6 @@ object TextAnalysis {
     */
   def bm25TopK(docs: DataFrame, queries: Seq[(Long, Seq[String])],
       topK: Int = 10): DataFrame = {
-    val (ranked, tf) = bm25TopKLazy(docs, queries, topK)
-    // eager-materialize the BOUNDED result (|queries|·topK rows — the
-    // audit-report convention) so the corpus-sized tf cache can be
-    // released before returning: the r11 advice's leak — a library
-    // caller invoking this repeatedly accumulated a cached tf per call
-    // (Bench/Verify masked it by clearing the catalog cache between
-    // queries). Same idiom as Dedup.nearDupPairsView; PlanAudit sweeps
-    // audit the lazy spelling via lazyTwin.
-    val out = ranked.localCheckpoint(true)
-    tf.unpersist()
-    out
-  }
-
-  /** [[bm25TopK]]'s lazy plan plus the shared persisted tf frame — the
-    * PlanAudit twin (the materialized spelling returns a checkpointed
-    * RDD scan, nothing to audit) and the release seam.
-    */
-  def bm25TopKLazy(docs: DataFrame, queries: Seq[(Long, Seq[String])],
-      topK: Int = 10): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val s = docs.sparkSession
     import s.implicits._
@@ -1760,7 +1741,11 @@ object TextAnalysis {
       .select(col("query_id"), col("rnk"), col("doc_id"),
         col("n_terms_hit"), r4(col("score")).as("score"))
       .orderBy(col("query_id"), col("rnk"))
-    (ranked, tf)
+    // the result is BOUNDED (|queries|·topK rows), so materialize it and
+    // release the corpus-sized tf cache before returning: a library
+    // caller invoking this repeatedly would otherwise accumulate one
+    // cached tf per call (the r11 advice's leak)
+    Materialize(ranked, tf)
   }
 
   /** t21's fixture query set: corpus-adapted mixes of the one rare term

@@ -6,7 +6,9 @@ package graft.tools
   * scale regression shows up as a diff in this tool's output rather than
   * a slow cluster run. BNLJ is acceptable ONLY with a constant-size
   * broadcast build side (the ANN query-set pattern, s1/s4) — anything
-  * else listed here is a bug.
+  * else listed here is a bug. Every frame is built under
+  * `Materialize.planOnly`, so the audit sees whole plans and runs no
+  * checkpoint job; the [[iterative]] queries are skipped.
   *
   * Usage: runMain graft.tools.PlanAudit [sfDir]
   */
@@ -217,7 +219,7 @@ object PlanAudit {
   // boundedness argument. Anything not listed here that trips
   // collectAggregates is the q53 hot-key scale bug. (Aggregates inside
   // persisted frames — d2/d3's cached gram sets — are audited where the
-  // building pipeline is lazily plannable, the lazyTwin convention.)
+  // building pipeline is lazily plannable.)
   val allowedCollects: Map[String, String] = Map(
     "q56_ts_subsequence_topk" ->
       "per-(user, window-start) subsequence assembly: LENGTH-L-bounded (the window length is a query parameter — complete windows carry exactly L rows; incomplete ones are filtered before any array leaves the aggregate)",
@@ -405,63 +407,6 @@ object PlanAudit {
     "p28_corpus_build" ->
       "staged-artifact composite: every stage localCheckpoints at build (the d6 iterative class via connectedComponents); per-stage shapes are the stand-alone operators' audited shapes (d14/t18/t19/d1/d19/d21/d2+d6+d7/d8)")
 
-  // d2's queries() entry returns the eagerly materialized pair-graph
-  // view (a checkpointed-RDD scan — nothing to audit); audit the lazy
-  // pipeline it materializes instead.
-  val lazyTwin: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map("d2_dedup_minhash_lsh" ->
-      ((s, d) => graft.operators.Dedup.nearDupPairs(graft.Tables.documents(s, d))),
-      // t21 eager-materializes its bounded top-k so the shared tf cache
-      // can be released (r12); audit the lazy spelling
-      "t21_bm25_topk" ->
-      ((s, d) => graft.operators.TextAnalysis.bm25TopKLazy(
-        graft.Tables.documents(s, d), graft.operators.TextAnalysis.Bm25Queries)._1),
-      // d3 eager-materializes its bounded pair output so the shared gram
-      // aggregate can be released (r12 advice); audit the lazy spelling
-      "d3_dedup_ngram_jaccard" ->
-      ((s, d) => graft.operators.Dedup.ngramJaccardAutoLazy(
-        graft.Tables.documents(s, d))._1),
-      // p23 eager-materializes the host-proportional edge list once
-      // (one corpus scan feeds all iterations); audit the lazy spelling
-      "p23_domain_pagerank" ->
-      ((s, d) => graft.operators.Pipeline.domainPageRankLazy(
-        graft.Tables.documents(s, d).select(
-          org.apache.spark.sql.functions.col("doc_id"),
-          graft.operators.TextAnalysis.fixtureDirtyUrl.as("url"),
-          graft.operators.TextAnalysis.fixtureLinkedHtml.as("html")))),
-      // p30 eager-materializes the host-proportional edge list once
-      // (the p23 idiom); audit the lazy spelling
-      "p30_domain_hits" ->
-      ((s, d) => graft.operators.Pipeline.domainHitsLazy(
-        graft.Tables.documents(s, d).select(
-          org.apache.spark.sql.functions.col("doc_id"),
-          graft.operators.TextAnalysis.fixtureDirtyUrl.as("url"),
-          graft.operators.TextAnalysis.fixtureLinkedHtml.as("html")))),
-      "p26_rank_weighted_sample" ->
-      ((s, d) => {
-        import org.apache.spark.sql.functions.{col, round}
-        val T = graft.operators.TextAnalysis
-        val P = graft.operators.Pipeline
-        val docs = graft.Tables.documents(s, d)
-        val ranks = P.domainPageRankLazy(docs.select(col("doc_id"),
-            T.fixtureDirtyUrl.as("url"), T.fixtureLinkedHtml.as("html")))
-          .select(col("host"), col("score"))
-        P.weightedSystematicSample(
-          docs.select(col("doc_id"), col("lang"),
-              T.hostOf(T.canonicalizeUrl(T.fixtureDirtyUrl)).as("host"))
-            .join(ranks, Seq("host"))
-            .select(col("doc_id"), col("lang"),
-              round(col("score") * 10000).cast("long").as("w")),
-          col("w"), k = 100L)
-      }),
-      "p24_domain_trustrank" ->
-      ((s, d) => graft.operators.Pipeline.domainTrustRankLazy(
-        graft.Tables.documents(s, d).select(
-          org.apache.spark.sql.functions.col("doc_id"),
-          graft.operators.TextAnalysis.fixtureDirtyUrl.as("url"),
-          graft.operators.TextAnalysis.fixtureLinkedHtml.as("html")),
-        graft.operators.Pipeline.TrustSeeds)))
-
   // Queries whose nested-loop join is a CONSTANT-size broadcast by
   // design (never grows with the corpus) — the legitimate BNLJ shape.
   // Object-level (not local to main) so PlanAuditSpec's whole-surface
@@ -558,7 +503,7 @@ object PlanAudit {
         if (iterative.contains(name)) {
           println(f"[audit] $name%-28s SKIPPED [${iterative(name)}]")
         } else {
-        val df = lazyTwin.getOrElse(name, fn)(spark, sfDir)
+        val df = graft.operators.Materialize.planOnly(fn(spark, sfDir))
         val plan = df.queryExecution.executedPlan.toString
         val bnlj = plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin"))
         val cart = plan.linesIterator.count(_.contains("CartesianProduct"))

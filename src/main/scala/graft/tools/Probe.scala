@@ -5,6 +5,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.{Bench, GraftSession, SparkEntry}
+import graft.operators.Materialize
 
 /** The one probe over the benched queries, on a `GraftSession.local()`
   * session (`SPARK_GRAFT_CPUS` sets the core count). Two modes:
@@ -21,8 +22,10 @@ import graft.{Bench, GraftSession, SparkEntry}
   *     `explain("formatted")` to `<outDir>/<query>_<suffix>.txt` (the
   *     `plans/` before/after evidence) over the tables at
   *     `SPARK_GRAFT_SF_DIR`, which it requires; sf0.01 is enough, since
-  *     this is plan shape, not timing. A query that checkpoints while its
-  *     frame is built runs those jobs here too.
+  *     this is plan shape, not timing. Each frame is built under
+  *     [[graft.operators.Materialize.planOnly]], so the dump shows the
+  *     whole plan and no checkpoint job runs; the loops that checkpoint
+  *     once per round (`PlanAudit.iterative`) still run theirs.
   *
   * Usage: runMain graft.tools.Probe time <sfDir> <runs> <query|all> [query ...]
   *        SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.tools.Probe plan <outDir> <suffix> <query> [query ...]
@@ -72,7 +75,8 @@ object Probe {
       queries: Seq[Query]): Unit = {
     Files.createDirectories(outDir)
     queries.foreach { case (name, fn) =>
-      val text = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      val text = Materialize.planOnly(fn(spark, sfDir)).queryExecution.explainString(FormattedMode)
+      spark.catalog.clearCache()
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), text)
       println(s"[probe] $name -> ${name}_$suffix.txt (Exchange~${"Exchange".r.findAllIn(text).size})")
     }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
@@ -10,7 +11,8 @@ import org.apache.spark.util.Clock
 /** Bridge into Spark's private[sql] API: the Column factory, so graft's
   * custom Catalyst expressions (SURVEY.md H1) can be used as Columns
   * without a function-registry round-trip, and the streaming entry points
-  * the embedded [[graft.streaming.Nibbler]] starts its query through. Lives
+  * the embedded [[graft.streaming.Nibbler]] starts its query through, and
+  * the block release [[graft.operators.Materialize.release]] uses. Lives
   * in the org.apache.spark.sql package solely for access; no Spark
   * internals are modified.
   */
@@ -21,6 +23,12 @@ object GraftColumnBridge {
   /** A DataFrame over an arbitrary logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Free `rdd`'s cached blocks without `RDD.unpersist`'s warning that a
+    * locally checkpointed RDD cannot be recomputed.
+    */
+  def unpersistRDD(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Start an append-mode streaming query that reads the V1 `source` into
     * the V1 `sink`, with a temporary checkpoint that is deleted on stop.

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{SparkSpec, Tables}
+import graft.operators.Materialize
 import org.apache.spark.sql.functions._
 
 /** The corpus-hint invariant, spec-pinned: PlanAudit.corpusBroadcastHints
@@ -13,7 +14,7 @@ class PlanAuditSpec extends SparkSpec {
   /** The audited surface (r11 verdict item 5): every verify frame PLUS
     * every benchFn spelling that differs from it — the frames BENCH
     * actually times audit as ROOTS, not only as subtrees of verify
-    * frames. Rows are (display, base, fn); iterative/lazyTwin/allowlist
+    * frames. Rows are (display, base, fn); iterative/allowlist
     * adjudications key on the BASE name (a bench frame is the verify
     * frame minus gate legs, never a new shape — the SURVEY §6
     * bench/verify-split contract, so an adjudication that covers the
@@ -28,21 +29,30 @@ class PlanAuditSpec extends SparkSpec {
     (qs.toSeq.map { case (n, fn) => (n, n, fn) } ++ bench).sortBy(_._1)
   }
 
+  /** `probe` over every non-iterative frame of the surface, each built
+    * under Materialize.planOnly so the whole plan is visible and no
+    * checkpoint job runs. Rows are (display, base, result). A frame that
+    * fails to build or probe fails the sweep: a swallowed failure would
+    * read as "no findings".
+    */
+  private def overSurface[T](probe: org.apache.spark.sql.DataFrame => T): Seq[(String, String, T)] = {
+    val rows = auditSurface.collect {
+      case (display, base, fn) if !PlanAudit.iterative.contains(base) =>
+        val r = try Right(probe(Materialize.planOnly(fn(spark, sfDir))))
+          catch { case e: Throwable => Left(s"$display: $e") }
+        spark.catalog.clearCache()
+        (display, base, r)
+    }
+    val failed = rows.collect { case (_, _, Left(msg)) => msg }
+    assert(failed.isEmpty, s"frames that failed to build or probe: ${failed.mkString("; ")}")
+    rows.collect { case (display, base, Right(r)) => (display, base, r) }
+  }
+
   /** Run one guard over the whole surface; returns unadjudicated hits. */
   private def sweep(guard: org.apache.spark.sql.DataFrame => Seq[String],
       allowed: Set[String]): Seq[(String, Seq[String])] =
-    auditSurface.collect {
-      case (display, base, fn) if !PlanAudit.iterative.contains(base) =>
-        // lazyTwin replaces only the VERIFY frame (the twin is its lazy
-        // spelling); a bench frame audits as itself
-        val audited = if (display == base) PlanAudit.lazyTwin.getOrElse(base, fn) else fn
-        val hits = try guard(audited(spark, sfDir)) catch {
-          case _: Throwable => Seq.empty // planning failures are OperatorSpec's dept
-        }
-        spark.catalog.clearCache()
-        (display, base, hits)
-    }.collect { case (display, base, hits) if hits.nonEmpty && !allowed.contains(base) =>
-      (display, hits)
+    overSurface(guard).collect {
+      case (display, base, hits) if hits.nonEmpty && !allowed.contains(base) => (display, hits)
     }
 
   private def offendersMsg(offenders: Seq[(String, Seq[String])]): String =
@@ -173,15 +183,8 @@ class PlanAuditSpec extends SparkSpec {
     // could hide among the known ones. This pins the full (query -> node
     // count) census: a new offender, a removed one, or a stale
     // allowedGlobalWindows entry each fails loudly with the diff.
-    val census = auditSurface.collect {
-      case (display, base, fn) if !PlanAudit.iterative.contains(base) =>
-        val audited = if (display == base) PlanAudit.lazyTwin.getOrElse(base, fn) else fn
-        val hits = try PlanAudit.globalWindows(audited(spark, sfDir)) catch {
-          case _: Throwable => Seq.empty
-        }
-        spark.catalog.clearCache()
-        (display, hits.size)
-    }.filter(_._2 > 0).toMap
+    val census = overSurface(PlanAudit.globalWindows(_).size)
+      .collect { case (display, _, n) if n > 0 => display -> n }.toMap
     val expected = Map(
       "p14_epoch_shuffle" -> 1,
       "p15_curriculum_order" -> 1,
@@ -206,9 +209,8 @@ class PlanAuditSpec extends SparkSpec {
     // the allowlist with a boundedness argument — the whole-repo
     // invariant, enforced here so a regression fails the suite, not
     // just the out-of-band audit tool. Exclusions come from PlanAudit's
-    // OWN shared lists (iterative algorithms execute at plan-build; d2
-    // and t21 audit via their lazy twins) so the tool and this sweep
-    // can't drift.
+    // OWN shared lists (iterative algorithms execute at plan-build) so
+    // the tool and this sweep can't drift.
     val offenders = sweep(PlanAudit.corpusBroadcastHints, PlanAudit.allowedHints.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated corpus-rooted hints: ${offendersMsg(offenders)}")
@@ -250,17 +252,14 @@ class PlanAuditSpec extends SparkSpec {
     // the logical plan doesn't show. Cartesians have NO allowlist: the
     // guard closure flags them under a sentinel name so they fail for
     // any query, adjudicated or not.
-    val offenders = auditSurface.collect {
-      case (display, base, fn) if !PlanAudit.iterative.contains(base) =>
-        val audited = if (display == base) PlanAudit.lazyTwin.getOrElse(base, fn) else fn
-        val plan = try audited(spark, sfDir).queryExecution.executedPlan.toString
-          catch { case _: Throwable => "" } // planning failures are OperatorSpec's dept
-        spark.catalog.clearCache()
-        val bnlj = plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin"))
-        val cart = plan.linesIterator.count(_.contains("CartesianProduct"))
-        (display, base, bnlj, cart)
-    }.filter { case (_, base, bnlj, cart) =>
-      cart > 0 || (bnlj > 0 && !PlanAudit.allowedBnlj.contains(base)) }
+    val offenders = overSurface { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      (plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin")),
+        plan.linesIterator.count(_.contains("CartesianProduct")))
+    }.collect { case (display, base, (bnlj, cart))
+        if cart > 0 || (bnlj > 0 && !PlanAudit.allowedBnlj.contains(base)) =>
+      (display, base, bnlj, cart)
+    }
     assert(offenders.isEmpty,
       s"unadjudicated BNLJ/cartesian joins: ${offenders.map(o => s"${o._1}(bnlj=${o._3},cart=${o._4})").mkString("; ")}")
   }

@@ -10,8 +10,11 @@ Query names fold to the short baseline key (`d3_near_dup...` -> `d3`), as
 tools/benchbaseline.py folds them; two names with one short key are an
 error. New queries (no floor yet) are listed separately — stamp them into
 the baseline with tools/benchbaseline.py once a clean run exists.
+A host factor above MAX_HOST_FACTOR is itself a regression: a uniform
+slowdown of every query would otherwise excuse itself.
 --self-test plants a 10x regression under both key styles (and as a lone
-query) and checks that each grades as a regression.
+query) and a uniform 3x slowdown, and checks that each grades as a
+regression.
 Exit code: 0 clean, 1 regressions found, 2 usage/parse error.
 """
 import contextlib
@@ -30,6 +33,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # of the surface: over a handful of floored queries it is one of the
 # graded queries' own ratios, and a lone 10x regression excuses itself.
 MIN_CALIBRATION_SHARE = 0.5
+
+# The largest host factor ever measured on unchanged code was 1.6-1.7x
+# (round 12). A median ratio above this cap is a slowdown of the surface,
+# not a slower host.
+MAX_HOST_FACTOR = 2.0
 
 
 def load_floors():
@@ -73,6 +81,10 @@ def main(path):
         host = 1.0
         print(f"{len(ratios)} of {len(floors)} floored queries: too few to "
               "calibrate the host, grading against the raw floors")
+    if host > MAX_HOST_FACTOR:
+        print(f"REGRESSION host factor (median t/floor) {host:.2f}x is above "
+              f"the {MAX_HOST_FACTOR:.1f}x cap: a uniform slowdown, not a slower host")
+        return 1
     regressions, new, improved = [], [], []
     for q, t in sorted(qs.items()):
         if not isinstance(t, (int, float)):
@@ -118,6 +130,7 @@ def self_test():
         (f"10x {slow}, full names", full(planted), 1),
         (f"10x {slow} alone, short key", {slow: planted[slow]}, 1),
         (f"10x {slow} alone, full name", full({slow: planted[slow]}), 1),
+        ("every query 3x", {q: 3 * t for q, t in floors.items()}, 1),
         ("two names with one short key", {f"{slow}_a": 1.0, f"{slow}_b": 1.0}, 2),
     ]
     failed = 0
