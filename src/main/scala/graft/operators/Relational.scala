@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.StompTiles
 import Num._
 
 /** Relational operator pack (SURVEY.md §2 B1–B20).
@@ -2576,46 +2577,6 @@ object Relational {
     profileFromPairs(pairs).withColumnRenamed("dist", "dist_est")
   }
 
-  /** The STOMP diagonal core shared by B59/B60 (Zhu et al., ICDM 2016):
-    * per-pair window statistics WITHOUT a per-pair O(L) fold. Values are
-    * scaled to exact integers X = floor(100·value + 0.5) (the events
-    * column is 2-decimal telemetry; the s10 integer-Gram discipline), so
-    * every sum below is EXACT and therefore order- and ALGORITHM-
-    * independent — Spark computes them incrementally along diagonals
-    * while the DuckDB oracle replays a direct per-pair fold, and the
-    * integers agree bit-for-bit by construction (no pinned fold needed).
-    *
-    * Decomposition: window starts sit on the stride grid (s ≡ 1 mod
-    * stride), so every admissible pair (s1, s2 = s1 + d) lives on a
-    * DIAGONAL d ∈ {stride·⌈L/stride⌉, +stride, …} and
-    *   QT(s1, s1+d) = Σ_{p∈[s1, s1+L)} X[p]·X[p+d]
-    * is an L-window sum over that diagonal's product series. One
-    * running-sum Window frame per (user, diagonal) — Spark's unbounded-
-    * preceding frame is maintained INCREMENTALLY, O(1) per row: exactly
-    * the STOMP recurrence QT(s+σ, s+σ+d) = QT(s, s+d) − dropped +
-    * entered, spelled as cum[p] − cum[p−L] — and the same pass carries
-    * ΣX, ΣX², ΣY, ΣY² for both endpoints, so the per-window mean/std
-    * (B60) also costs no extra scan. Per-pair work drops from O(L) to
-    * O(1); total work O(N²/stride) per user instead of O(N²·L/stride²).
-    *
-    * Scale shape: the diagonal key family (user, d) is the skew spread
-    * — a user's O(N²) pair space partitions into N/stride diagonals of
-    * ≤ N rows each, finer than the triangle buckets it supersedes (the
-    * `buckets` parameter is kept for API compatibility and losslessness
-    * at any value, which the diagonal spelling gives trivially). The
-    * product rows feed ONE fine-grained (user, p) equi-join and ONE
-    * window sort; no array payload ever crosses a shuffle.
-    */
-  /** `newFrom`: optional per-user (user_id, old_max) stripe floor — the
-    * STAMPI refresh restriction (q73): only pairs whose LATER window
-    * starts past old_max are emitted, and only the rows those pairs'
-    * incremental window sums need are generated (the contiguous diagonal
-    * suffix from y-position old_max — the suffix's own cumulative sums
-    * telescope, so winSum stays exact wherever the lag-L row exists, and
-    * every row where it doesn't is an OLD pair the s2 filter drops).
-    * Users absent from the floor frame (new users, or users with no
-    * published window) keep their full pair space.
-    */
   /** The integer position series shared by the whole ts family
     * ([[diagonalPairStats]], [[tsAcf]]): (user_id, p, x) with p the
     * 1-based event_id rank and x = round(100·value) as an exact long.
@@ -2637,7 +2598,7 @@ object Relational {
     * floor(scaled+0.5) is correct round-to-nearest for negatives too
     * once the guard passes (|scaled − xi| ≪ 0.5 by construction).
     */
-  private def integerSeries(events: DataFrame): DataFrame = {
+  private[graft] def integerSeries(events: DataFrame): DataFrame = {
     val wPos = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
     val scaled = col("value") * 100.0
     val xi = floor(scaled + 0.5).cast("long")
@@ -2653,78 +2614,56 @@ object Relational {
       .select(col("user_id"), col("p"), col("x"))
   }
 
-  private def diagonalPairStats(events: DataFrame, L: Int,
+  /** The STOMP diagonal core shared by B59/B60/B72/B73 (Zhu et al., ICDM
+    * 2016): per-pair window statistics (user_id, s1, s2, qt, sx1, sq1, sx2,
+    * sq2) WITHOUT a per-pair O(L) fold. Values are scaled to exact
+    * integers X = floor(100·value + 0.5) (the events column is 2-decimal
+    * telemetry; the s10 integer-Gram discipline), so every sum is EXACT
+    * and therefore order- and ALGORITHM-independent: the kernel walks
+    * diagonals with prefix sums while the DuckDB oracle replays a direct
+    * per-pair fold, and the integers agree bit for bit by construction.
+    *
+    * Shape: the series ([[integerSeries]], one user-keyed Exchange) is cut
+    * into per-user tiles of at most 2·(C+L−1) positions
+    * ([[StompTiles]], C = [[StompTiles.Chunk]]), one bounded collect_list
+    * per (user, tile), and one [[StompTiles.pairs]] call per tile emits the
+    * tile's pairs. The tile aggregate and the consumers' per-(user, start)
+    * argmin reuse the series' user partitioning, so the whole family adds
+    * no Exchange past the series' one. (Measured on 4 cores: an own
+    * (user, tile) Exchange adds two Exchanges and two jobs, and made q60
+    * ~20% slower at sf0.01 and ~20% faster at sf0.1, where the reused
+    * partitioning leaves the kernel stage few tasks.) At sf0.1 a user has
+    * at most 99 events, so every user is one tile.
+    *
+    * `sampleDiagEvery` E keeps every E-th admissible diagonal (the
+    * deterministic SCRIMP-class lattice d0 + k·stride·E, Zhu et al. ICDM
+    * 2018): a one-sided estimate that replays EXACTLY in any engine.
+    * `newFrom` is an optional per-user (user_id, old_max) floor, the
+    * STAMPI refresh restriction (q73): only pairs whose LATER window
+    * starts past old_max are emitted, and each diagonal's pass starts at
+    * its first such pair. Users absent from the floor frame (new users,
+    * or users with no published window) keep their full pair space.
+    */
+  private[graft] def diagonalPairStats(events: DataFrame, L: Int,
       stride: Int, sampleDiagEvery: Int = 1,
-      newFrom: Option[DataFrame] = None): DataFrame = {
+      newFrom: Option[DataFrame] = None,
+      chunk: Int = StompTiles.Chunk): DataFrame = {
     val ser = integerSeries(events)
-    // smallest stride multiple >= L: the first admissible diagonal
-    val d0 = ((L + stride - 1) / stride).toLong * stride
-    // LATER endpoint at position p2 pairs with p = p2 - d for every
-    // admissible diagonal; diagonals past N - L emit product rows but
-    // never a complete window (p >= L unreachable), a <L-row tail per
-    // user that vanishes in the filter below.
-    // DIAGONAL SUBSAMPLING (SCRIMP-class anytime preview, Zhu et al.
-    // ICDM 2018: the exact profile restricted to a diagonal subset is a
-    // one-sided estimate — min over fewer candidates ≥ the true min).
-    // The subsample is the DETERMINISTIC stride lattice d0 + k·stride·E
-    // (every E-th admissible diagonal), not a random draw: the work cut
-    // lands where it matters (the explode emits 1/E of the product rows,
-    // so everything downstream — join, window sums, argmin — shrinks
-    // proportionally) and the estimate replays EXACTLY in any engine
-    // (the q59 oracle discipline needs no pinned RNG).
-    val step = stride.toLong * sampleDiagEvery
-    val right0 = ser.filter(col("p") > d0)
-      .select(col("user_id"), col("p").as("p2"), col("x").as("y"),
-        explode(sequence(lit(d0), col("p") - 1, lit(step))).as("d"))
-      .withColumn("p", col("p2") - col("d"))
-    // stripe restriction: a pair's y-window covers y-positions
-    // [s2, s2+L-1], so every row a NEW pair (s2 ≥ old_max + stride, the
-    // first new grid start) can touch has p2 ≥ old_max + stride — the
-    // kept set is a contiguous per-diagonal suffix whose own cumulative
-    // sums telescope. The first new window's lag-L row is absent by
-    // exactly one row, where coalesce-0 makes winSum the full suffix sum
-    // = precisely that window's L rows; every earlier (partial) row is
-    // an old pair the final s2 filter drops.
-    val right = newFrom match {
-      case None => right0
-      // no broadcast hint: the floor frame is USER-proportional (one
-      // long per published user) — AQE broadcasts it while small and
-      // degrades to a user-keyed shuffle when it is not (the d2 rule)
-      case Some(f) => right0
-        .join(f.select(col("user_id"), col("old_max")), Seq("user_id"), "left")
-        .filter(coalesce(
-          col("p2") >= col("old_max") + lit(stride.toLong), lit(true)))
-        .drop("old_max")
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("user_id"))))
+    val tiles = ser
+      .select(col("user_id"), col("p"), col("x"),
+        explode(StompTiles.keys(col("p"), col("n"), chunk, L)).as("tile"))
+      .groupBy(col("user_id"), col("tile"))
+      .agg(collect_list(struct(col("p"), col("x"))).as("pts"))
+    // no broadcast hint: the floor frame is USER-proportional (one long
+    // per published user) — AQE broadcasts it while small and degrades to
+    // a user-keyed shuffle when it is not (the d2 rule)
+    val floored = newFrom.fold(tiles.withColumn("old_max", lit(0L))) { f =>
+      tiles.join(f.select(col("user_id"), col("old_max")), Seq("user_id"), "left")
     }
-    val prods = right.join(ser, Seq("user_id", "p"))
-      .select(col("user_id"), col("d"), col("p"), col("x"), col("y"),
-        (col("x") * col("y")).as("xy"))
-    val run = Window.partitionBy(col("user_id"), col("d")).orderBy(col("p"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val off = Window.partitionBy(col("user_id"), col("d")).orderBy(col("p"))
-    // ONE select per window-frame family: all five running sums share
-    // the (partition, order, frame) triple, so they land in ONE Window
-    // operator (a withColumn chain splits them into one operator per
-    // column — five full passes, measured); the five lags share the
-    // shifted frame and land in a second. Two passes total, one sort.
-    val cum = prods.select(col("user_id"), col("d"), col("p"),
-      sum(col("xy")).over(run).as("cxy"),
-      sum(col("x")).over(run).as("cx"),
-      sum(col("x") * col("x")).over(run).as("cx2"),
-      sum(col("y")).over(run).as("cy"),
-      sum(col("y") * col("y")).over(run).as("cy2"))
-    def winSum(c: String) =
-      (col(c) - coalesce(lag(col(c), L).over(off), lit(0L))).as(c + "w")
-    // window ENDS at p: s1 = p - L + 1 must sit on the stride grid; the
-    // filter references non-partition columns so it stays ABOVE the
-    // Window operators (lag needs the unfiltered row sequence).
-    cum.select(col("user_id"), col("d"), col("p"),
-        winSum("cxy"), winSum("cx"), winSum("cx2"), winSum("cy"), winSum("cy2"))
-      .filter(col("p") >= L && (col("p") - L) % stride === 0)
-      .select(col("user_id"), (col("p") - L + 1).as("s1"),
-        (col("p") - L + 1 + col("d")).as("s2"),
-        col("cxyw").as("qt"), col("cxw").as("sx1"), col("cx2w").as("sq1"),
-        col("cyw").as("sx2"), col("cy2w").as("sq2"))
+    floored.select(col("user_id"), inline(StompTiles.pairs(col("tile"),
+      coalesce(col("old_max"), lit(0L)), col("pts"), chunk, L, stride,
+      stride * sampleDiagEvery)))
   }
 
   /** Both-endpoint argmin: each canonical (s1 < s2) pair contributes a
@@ -3728,8 +3667,8 @@ object Relational {
     * series INCLUDING the arrivals (appends only — every new event sits
     * after a user's published positions; window starts are
     * row-number-stable under appends, which is what makes old rows
-    * reusable at all). The stripe job generates ONLY the per-diagonal
-    * suffix the new pairs touch ([[diagonalPairStats]]'s `newFrom`), so
+    * reusable at all). The stripe job computes ONLY the
+    * pairs the new windows form ([[diagonalPairStats]]'s `newFrom`), so
     * refresh work is O(W_new · W_total) per user — STAMPI's linear
     * increment, not the rebuild's O(W_total²). Both endpoints of every
     * stripe pair enter the merge (a new window can improve an OLD
@@ -3748,10 +3687,7 @@ object Relational {
     val old = readTsProfile(spark, root)
     val oldMax = old.groupBy(col("user_id"))
       .agg(max(col("start")).as("old_max"))
-    val st = diagonalPairStats(fullEvents, L, stride, newFrom = Some(oldMax))
-    val stripePairs = st
-      .join(oldMax, Seq("user_id"), "left")
-      .filter(coalesce(col("s2") > col("old_max"), lit(true)))
+    val stripePairs = diagonalPairStats(fullEvents, L, stride, newFrom = Some(oldMax))
       .select(col("user_id"), col("s1"), col("s2"),
         r4((col("sq1") + col("sq2") - lit(2L) * col("qt")).cast("double")
           / lit(10000.0)).as("dist"))
@@ -3976,8 +3912,8 @@ object Relational {
       count(lit(1)).as("n"), sum(col("x")).as("s"),
       sum(col("x") * col("x")).as("q"))
     // TAIL endpoint at position p2 pairs with head p = p2 − d for every
-    // lag d ∈ [1, min(p2−1, maxLag)] (the diagonalPairStats explode
-    // shape; the p2 > 1 guard matters because Spark's sequence() runs
+    // lag d ∈ [1, min(p2−1, maxLag)] (a bounded-lag explode; the
+    // p2 > 1 guard matters because Spark's sequence() runs
     // DESCENDING when stop < start).
     val st = ser.filter(col("p") > 1)
       .select(col("user_id"), col("p").as("p2"), col("x").as("y"),
@@ -4690,9 +4626,9 @@ object Relational {
     val run = Window.partitionBy(col("user_id"), col("d")).orderBy(col("p"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val off = Window.partitionBy(col("user_id"), col("d")).orderBy(col("p"))
-    // one Window operator per frame family (the diagonalPairStats
-    // one-select discipline): three running sums share `run`, three
-    // lags share `off`.
+    // one Window operator per frame family (one select per frame, so
+    // the columns share an operator): three running sums share `run`,
+    // three lags share `off`.
     val cum = prods.select(col("user_id"), col("d"), col("p"),
       sum(col("x") * col("y")).over(run).as("cxy"),
       sum(col("x") * col("x")).over(run).as("cx2"),

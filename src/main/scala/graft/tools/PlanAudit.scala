@@ -228,11 +228,17 @@ object PlanAudit {
     "q58_ts_motif" ->
       "the q56 window assembly (shared tsWindows): LENGTH-L-bounded by the same argument",
     "q59_ts_matrix_profile" ->
-      "the q56 window assembly (shared tsWindows): LENGTH-L-bounded by the same argument",
+      "the STOMP kernel's per-(user, tile) position collect (StompTiles): a tile is two chunks of C = StompTiles.Chunk window starts with their L-1 overlap, at most 2·(C+L-1) positions per row — a constant plus a query parameter, never a user's history",
     "q60_ts_matrix_profile_znorm" ->
-      "the q56 window assembly (shared tsWindows): LENGTH-L-bounded by the same argument",
+      "q59's tile collect (shared diagonalPairStats): at most 2·(C+L-1) positions per row",
     "q61_ts_discord_topk" ->
-      "the q56 window assembly (shared tsWindows): LENGTH-L-bounded by the same argument",
+      "q59's tile collect (shared diagonalPairStats): at most 2·(C+L-1) positions per row",
+    "q64_ts_fluss_cac" ->
+      "q59's tile collect (the CAC rides the unsorted profile core): at most 2·(C+L-1) positions per row",
+    "q66_ts_regime_boundaries" ->
+      "q64's curve over q59's tile collect: at most 2·(C+L-1) positions per row",
+    "q72_ts_profile_sampled" ->
+      "q59's tile collect (the sampled lattice and the exact gate leg share diagonalPairStats): at most 2·(C+L-1) positions per row",
     "q62_ts_left_profile" ->
       "the q56 window assembly (shared tsWindows): LENGTH-L-bounded by the same argument",
     "q65_ts_floss_cac1" ->
@@ -253,10 +259,6 @@ object PlanAudit {
       "per-order item set: basket-size-bounded (TPC-H <= 7 lines/order; real baskets are bounded by checkout size, not corpus size)",
     "q53_ewma_by_user" ->
       "per-user history: activity-bounded (the t21 contract) at bench SF; the 100 TB spelling is q55's WINDOWED SHARD (shipped, spec-pinned bit-equal) — this monolithic fold stays as the single-window oracle form",
-    "s6_ann_pq_topk" ->
-      "per-vector code/x-hat reassembly: m(=8)-row groups — PQ-subspace-PARAMETER-bounded",
-    "s8_ann_ivfpq_topk" ->
-      "per-vector code/x-hat reassembly: m(=8)-row groups (the s6 class)",
     "t21_bm25_topk" ->
       "per-(query,doc) term-weight list: bounded by the QUERY'S term count (parameter-bounded query set; the sorted fold is the cross-engine float contract)",
     "t25_hybrid_rrf" ->
@@ -371,12 +373,6 @@ object PlanAudit {
       "pair enumeration over the |event_type|-row post-aggregate sketch frame (constant size, the allowedBnlj argument)",
     "q58_ts_motif" ->
       "triangle-partitioned WITHIN user ((user,k1,k2) key — the d5 spread: no user funnels its W^2/2 window pairs through one task) AND the array payload is L doubles, a query PARAMETER — slim regardless of corpus",
-    "q59_ts_matrix_profile" ->
-      "q58's triangle-partitioned within-user pairwise verbatim (shared shape; the profile keeps BOTH endpoints of each canonical pair before one per-window argmin)",
-    "q60_ts_matrix_profile_znorm" ->
-      "q59's triangle-partitioned pairwise with per-window mean/std scalar columns; the pair fold is one QT dot product (the STOMP identity), payload still L doubles + two scalars",
-    "q61_ts_discord_topk" ->
-      "q59's triangle-partitioned pairwise verbatim; the discord reduction on top is one TakeOrderedAndProject",
     "q62_ts_left_profile" ->
       "bounded-offset explode (horizon/stride candidates per window, a PARAMETER) feeding one (user,pstart) equi-join; payload L doubles",
     "q65_ts_floss_cac1" ->

@@ -1,7 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.{Bench, GraftSession, SparkEntry}
@@ -13,7 +17,8 @@ import graft.operators.Materialize
   *   - `time <sfDir> <runs> <query|all> [query ...]` times each query
   *     `runs` times in a row through [[graft.Bench.timeOnce]], the bench's
   *     own timed action, and prints each run's seconds (negative when the
-  *     run failed) and its count of fresh codegen compilations. `all`
+  *     run failed), its count of fresh codegen compilations and the Spark
+  *     jobs it started (frame build included). `all`
   *     stands for every benched query. A warm run that still compiles
   *     lost its generated classes from the codegen cache to the queries
   *     before it, so `all` followed by suspect queries shows whether a
@@ -61,15 +66,17 @@ object Probe {
 
   private type Query = (String, (SparkSession, String) => DataFrame)
 
-  private def time(spark: SparkSession, sfDir: String, runs: Int, queries: Seq[Query]): Unit =
+  private def time(spark: SparkSession, sfDir: String, runs: Int, queries: Seq[Query]): Unit = {
+    val jobs = new JobCounter(spark.sparkContext)
     queries.foreach { case (name, fn) =>
       (1 to runs).foreach { i =>
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t = Bench.timeOnce(spark, sfDir, name, fn)
         val fresh = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-        println(f"[probe] $name run $i $t%.2f s, fresh compilations=$fresh")
+        println(f"[probe] $name run $i $t%.2f s, fresh compilations=$fresh, jobs=${jobs.take()}")
       }
     }
+  }
 
   private def plan(spark: SparkSession, sfDir: String, outDir: Path, suffix: String,
       queries: Seq[Query]): Unit = {
@@ -81,4 +88,33 @@ object Probe {
       println(s"[probe] $name -> ${name}_$suffix.txt (Exchange~${"Exchange".r.findAllIn(text).size})")
     }
   }
+}
+
+/** Counts the Spark jobs a context starts. [[take]] returns the count
+  * since the last call: it runs one marker job, outside any timed run,
+  * and waits for the listener to see it, so every earlier job has been
+  * counted (the listener bus delivers in order).
+  */
+final class JobCounter(sc: SparkContext) extends SparkListener {
+  private val marker = "graft.jobcounter.marker"
+  private val id = System.identityHashCode(this).toString
+  private val started = new AtomicLong
+  private val marks = new LinkedBlockingQueue[String]
+  sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty(marker))) match {
+      case Some(m) => if (m == id) marks.put(m)
+      case None => started.incrementAndGet()
+    }
+
+  def take(): Long = {
+    sc.setLocalProperty(marker, id)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(marker, null)
+    require(marks.poll(30, TimeUnit.SECONDS) != null, "listener bus did not catch up")
+    started.getAndSet(0)
+  }
+
+  def close(): Unit = sc.removeSparkListener(this)
 }

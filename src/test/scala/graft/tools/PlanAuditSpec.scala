@@ -29,31 +29,51 @@ class PlanAuditSpec extends SparkSpec {
     (qs.toSeq.map { case (n, fn) => (n, n, fn) } ++ bench).sortBy(_._1)
   }
 
-  /** `probe` over every non-iterative frame of the surface, each built
-    * under Materialize.planOnly so the whole plan is visible and no
-    * checkpoint job runs. Rows are (display, base, result). A frame that
-    * fails to build or probe fails the sweep: a swallowed failure would
-    * read as "no findings".
+  /** Every non-iterative frame of the surface, built ONCE under
+    * Materialize.planOnly so the whole plan is visible and no checkpoint
+    * job runs. Each frame's analyzed, optimized and physical plans are
+    * forced before the cache is cleared, so every guard reads the plan as
+    * built (a frame a query persisted still reads as its cached relation).
+    * Rows are (display, base, frame); the failures are (display: error).
     */
-  private def overSurface[T](probe: org.apache.spark.sql.DataFrame => T): Seq[(String, String, T)] = {
+  private lazy val built: (Seq[String], Seq[(String, String, org.apache.spark.sql.DataFrame)]) = {
     val rows = auditSurface.collect {
       case (display, base, fn) if !PlanAudit.iterative.contains(base) =>
-        val r = try Right(probe(Materialize.planOnly(fn(spark, sfDir))))
-          catch { case e: Throwable => Left(s"$display: $e") }
+        val r = try {
+          val df = Materialize.planOnly(fn(spark, sfDir))
+          df.queryExecution.executedPlan
+          Right(df)
+        } catch { case e: Throwable => Left(s"$display: $e") }
         spark.catalog.clearCache()
         (display, base, r)
     }
-    val failed = rows.collect { case (_, _, Left(msg)) => msg }
+    (rows.collect { case (_, _, Left(msg)) => msg },
+      rows.collect { case (display, base, Right(df)) => (display, base, df) })
+  }
+
+  /** `probe` over the built surface. Rows are (display, base, result). A
+    * frame that fails to build or probe fails the sweep: a swallowed
+    * failure would read as "no findings".
+    */
+  private def overSurface[T](probe: org.apache.spark.sql.DataFrame => T): Seq[(String, String, T)] = {
+    val rows = built._2.map { case (display, base, df) =>
+      (display, base, try Right(probe(df)) catch { case e: Throwable => Left(s"$display: $e") })
+    }
+    val failed = built._1 ++ rows.collect { case (_, _, Left(msg)) => msg }
     assert(failed.isEmpty, s"frames that failed to build or probe: ${failed.mkString("; ")}")
     rows.collect { case (display, base, Right(r)) => (display, base, r) }
   }
 
-  /** Run one guard over the whole surface; returns unadjudicated hits. */
+  /** Run one guard over the whole surface; returns the unadjudicated hits
+    * and the stale adjudications: entries naming no frame whose guard
+    * fires, which would mask a future regression under an old excuse.
+    */
   private def sweep(guard: org.apache.spark.sql.DataFrame => Seq[String],
-      allowed: Set[String]): Seq[(String, Seq[String])] =
-    overSurface(guard).collect {
-      case (display, base, hits) if hits.nonEmpty && !allowed.contains(base) => (display, hits)
-    }
+      allowed: Set[String]): (Seq[(String, Seq[String])], Set[String]) = {
+    val hits = overSurface(guard).filter(_._3.nonEmpty)
+    (hits.collect { case (display, base, h) if !allowed.contains(base) => (display, h) },
+      allowed -- hits.map(_._2))
+  }
 
   private def offendersMsg(offenders: Seq[(String, Seq[String])]): String =
     offenders.map(o => o._1 + "=" + o._2.mkString(",")).mkString("; ")
@@ -141,7 +161,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("the audited query+bench surface carries no unadjudicated enum-partitioned windows") {
-    val offenders = sweep(PlanAudit.enumWindows, PlanAudit.allowedEnumWindows.keySet)
+    val (offenders, _) = sweep(PlanAudit.enumWindows, PlanAudit.allowedEnumWindows.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated enum-partitioned windows: ${offendersMsg(offenders)}")
   }
@@ -166,13 +186,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("the audited query+bench surface carries no unadjudicated array-collect aggregates") {
-    val offenders = sweep(PlanAudit.collectAggregates, PlanAudit.allowedCollects.keySet)
+    val (offenders, stale) = sweep(PlanAudit.collectAggregates, PlanAudit.allowedCollects.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated array collects: ${offendersMsg(offenders)}")
+    assert(stale.isEmpty, s"stale allowedCollects adjudications: $stale")
   }
 
   test("the audited query+bench surface carries no unadjudicated global windows") {
-    val offenders = sweep(PlanAudit.globalWindows, PlanAudit.allowedGlobalWindows.keySet)
+    val (offenders, _) = sweep(PlanAudit.globalWindows, PlanAudit.allowedGlobalWindows.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated global windows: ${offendersMsg(offenders)}")
   }
@@ -211,7 +232,7 @@ class PlanAuditSpec extends SparkSpec {
     // just the out-of-band audit tool. Exclusions come from PlanAudit's
     // OWN shared lists (iterative algorithms execute at plan-build) so
     // the tool and this sweep can't drift.
-    val offenders = sweep(PlanAudit.corpusBroadcastHints, PlanAudit.allowedHints.keySet)
+    val (offenders, _) = sweep(PlanAudit.corpusBroadcastHints, PlanAudit.allowedHints.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated corpus-rooted hints: ${offendersMsg(offenders)}")
   }
@@ -238,9 +259,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("the audited query+bench surface carries no unadjudicated both-sides-array self-joins") {
-    val offenders = sweep(PlanAudit.arrayPairJoins, PlanAudit.allowedArrayPairJoins.keySet)
+    val (offenders, stale) = sweep(PlanAudit.arrayPairJoins, PlanAudit.allowedArrayPairJoins.keySet)
     assert(offenders.isEmpty,
       s"unadjudicated array pair joins: ${offendersMsg(offenders)}")
+    assert(stale.isEmpty, s"stale allowedArrayPairJoins adjudications: $stale")
   }
 
   test("the audited query+bench surface carries no unadjudicated nested-loop or cartesian joins") {
