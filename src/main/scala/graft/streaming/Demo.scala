@@ -1,8 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.duration._
@@ -10,11 +8,9 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** End-to-end driveable streaming surface (the relational pack has
-  * Verify/Bench; this is the streaming equivalent): runs the reference
-  * README's bank bulk-insert example through Nibbler, the size-or-ticker
-  * semantics through NibblerSink on a real file source, and a watermarked
-  * session_window stream — printing one `[demo] ... PASS|FAIL` line per
-  * scenario and exiting nonzero on any failure.
+  * Verify/Bench; this is the streaming equivalent): runs each scenario
+  * that no named spec asserts yet, printing one `[demo] ... PASS|FAIL`
+  * line per scenario and exiting nonzero on any failure.
   *
   * Usage: runMain graft.streaming.Demo [sfDir]
   */
@@ -43,26 +39,6 @@ object Demo {
     def check(name: String, cond: Boolean, detail: String): Unit =
       results += ((name, cond, detail))
 
-    // 1. Reference README bank example: 100 account statements pushed one
-    // by one, land in the "db" via bulk batches (size 10 / 500ms ticker).
-    {
-      val db = new ConcurrentHashMap[String, Long]()
-      val calls = new AtomicInteger()
-      implicit val enc: org.apache.spark.sql.Encoder[(String, Long)] =
-        org.apache.spark.sql.Encoders.product[(String, Long)]
-      val nib = Nibbler.start[(String, Long)](spark, NibblerConfig(
-        processor = (_, batch) => {
-          calls.incrementAndGet()
-          batch.foreach { case (id, bal) => db.put(id, bal); () }
-        },
-        size = 10, tickerDuration = 500.millis, processingTimeout = 5.seconds))
-      (0 until 100).foreach(i => nib.push((s"account_id_$i", 50000L / (i + 1))))
-      nib.awaitIdle()
-      nib.stop()
-      check("bank-bulk-insert", db.size == 100 && calls.get() <= 20,
-        s"accounts=${db.size} bulkCalls=${calls.get()}")
-    }
-
     // 2. NibblerSink on a streaming parquet file source: size-or-ticker
     // trigger classification over real event micro-batches.
     {
@@ -83,89 +59,6 @@ object Demo {
       val expected = events.count()
       check("file-source-sink", rows.get() == expected,
         s"rows=${rows.get()}/$expected batches=${batches.get()}")
-    }
-
-    // 2b. Queue subscriber (the reference README's #1 production story):
-    // a producer enqueues newline-delimited record files into a queue
-    // directory, SourcePresets.textQueue consumes at most 2 files per
-    // trigger (the Kafka maxOffsetsPerTrigger analog), NibblerSink
-    // applies the size-or-ticker contract — a burst drains as
-    // size-capped BATCH_FULL flushes, a trickle flushes on the ticker.
-    {
-      val queueDir = Files.createTempDirectory("graft-demo-queue").toString
-      def enqueue(name: String, lines: Seq[String]): Unit =
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(queueDir, s"$name.txt"),
-          lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-      val flushes =
-        new java.util.concurrent.ConcurrentLinkedQueue[(Trigger, Long)]()
-      val q = NibblerSink.start[org.apache.spark.sql.Row](
-        SourcePresets.textQueue(spark, queueDir, maxFilesPerTrigger = 2),
-        NibblerSink.Config(
-          processor = (t, ds) => { flushes.add((t, ds.count())); () },
-          size = 50, tickerDuration = 200.millis))
-      (1 to 4).foreach(i => enqueue(f"burst_$i%02d", (1 to 40).map(j => s"m$i-$j")))
-      q.processAllAvailable()
-      enqueue("trickle", (1 to 7).map(j => s"t-$j"))
-      q.processAllAvailable()
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      val fs = flushes.asScala.toVector
-      val ok = fs.map(_._2).sum == 167L &&
-        fs.init.forall(f => f._1 == Trigger.BatchFull && f._2 == 80L) &&
-        fs.last == ((Trigger.Ticker, 7L))
-      check("queue-subscriber", ok,
-        s"flushes=${fs.map { case (t, n) => s"$t:$n" }.mkString(",")}")
-    }
-
-    // 3. Watermarked session_window stream: finalized sessions match the
-    // batch answer on the same data.
-    {
-      implicit val evEnc: org.apache.spark.sql.Encoder[EventsPipeline.Event] =
-        org.apache.spark.sql.Encoders.product[EventsPipeline.Event]
-      val src = MemoryStream[EventsPipeline.Event]
-      def ev(id: Long, user: Long, minute: Long) =
-        EventsPipeline.Event(id, new Timestamp(minute * 60000L), user, "click", 1.0)
-      val data = Seq(ev(1, 1, 1000), ev(2, 1, 1010), ev(3, 1, 1060), ev(4, 2, 1005))
-      val q = EventsPipeline.sessionWindowAgg(src.toDS().toDF(),
-          gap = "30 minutes", watermark = "10 minutes")
-        .writeStream.format("memory").queryName("demo_sessions")
-        .outputMode("append").start()
-      src.addData(data: _*)
-      q.processAllAvailable()
-      src.addData(ev(5, 9, 9000))
-      q.processAllAvailable()
-      val streamed = spark.table("demo_sessions")
-        .filter(org.apache.spark.sql.functions.col("user_id") =!= 9).count()
-      q.stop()
-      import spark.implicits._
-      val batch = EventsPipeline.sessionWindowAgg(data.toDF()).count()
-      check("session-window-stream", streamed == batch && batch == 3L,
-        s"streamed=$streamed batch=$batch")
-    }
-
-    // 4. transformWithState (state v2, RocksDB provider): the session
-    // tracker's typed ValueState survives across micro-batches.
-    {
-      EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-      implicit val evEnc: org.apache.spark.sql.Encoder[EventsPipeline.Event] =
-        org.apache.spark.sql.Encoders.product[EventsPipeline.Event]
-      val src = MemoryStream[EventsPipeline.Event]
-      def ev(id: Long, user: Long, minute: Long) =
-        EventsPipeline.Event(id, new Timestamp(minute * 60000L), user, "click", 1.0)
-      val q = EventsPipeline.sessionTrackerTws(src.toDS())
-        .writeStream.format("memory").queryName("demo_tws")
-        .outputMode("update").start()
-      src.addData(ev(1, 1, 0), ev(2, 1, 5))
-      q.processAllAvailable()
-      src.addData(ev(3, 1, 65)) // 60 min gap -> second session, state carried
-      q.processAllAvailable()
-      q.stop()
-      import spark.implicits._
-      val fin = spark.table("demo_tws").orderBy($"n_events")
-        .as[EventsPipeline.SessionUpdate].collect().last
-      check("transform-with-state", fin == EventsPipeline.SessionUpdate(1, 2, 3),
-        s"final=$fin")
     }
 
     // 5. The reference's core story, closed end to end: a Processor
@@ -198,188 +91,6 @@ object Demo {
         .agg(min(col("doc_id"))).count()
       check("processor-runs-operators", kept.get() == expected && expected > 0,
         s"kept=${kept.get()}/$expected")
-    }
-
-    // 6. Streaming INGESTION GATE: the LLM-pipeline front door as one
-    // stream — every arriving doc is checked against the batch-staged
-    // benchmark gram set (A24 decontamination) while near-duplicates of
-    // earlier arrivals are flagged from LSH band state (A23) — and the
-    // gate's decisions match the batch operators on the same corpus.
-    {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      val docs = graft.Tables.documents(spark, sfDir)
-      val benchGrams = graft.operators.Dedup
-        .wordGramHashes(docs.filter(col("doc_id") % 20 === 0), 8)
-        .select("g").collect().map(_.getLong(0)).toSet
-      val arriving = docs.filter(col("doc_id") % 20 =!= 0)
-        .select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      // one MemoryStream per query: MemoryStream is single-consumer (a
-      // query's commit trims blocks the other may not have read yet)
-      val srcC = MemoryStream[(Long, String)]
-      val srcD = MemoryStream[(Long, String)]
-      val qc = EventsPipeline.decontaminateStream(srcC.toDS(), benchGrams)
-        .writeStream.format("memory").queryName("demo_gate_contam")
-        .outputMode("append").start()
-      val qd = EventsPipeline.nearDupStream(srcD.toDS(), minEstJaccard = 0.7)
-        .writeStream.format("memory").queryName("demo_gate_neardup")
-        .outputMode("append").start()
-      arriving.grouped(math.max(1, arriving.length / 2)).foreach { chunk =>
-        srcC.addData(chunk.toIndexedSeq: _*)
-        srcD.addData(chunk.toIndexedSeq: _*)
-        qc.processAllAvailable(); qd.processAllAvailable()
-      }
-      qc.stop(); qd.stop()
-      val contamGot = spark.table("demo_gate_contam")
-        .filter(col("contaminated")).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      val contamExp = graft.operators.Dedup
-        .decontaminate(docs, col("doc_id") % 20 === 0)
-        .filter(col("contaminated")).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      val dupFlagged = spark.table("demo_gate_neardup")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val dupExp = graft.operators.Dedup.nearDupPairs(docs.select("doc_id", "text"))
-        .filter(col("doc_a") % 20 =!= 0 && col("doc_b") % 20 =!= 0)
-        .select("doc_b").collect().map(_.getLong(0)).toSet
-      val dupFound = (dupExp & dupFlagged).size
-      check("streaming-ingestion-gate",
-        contamGot == contamExp && dupExp.nonEmpty && dupFound * 10 >= dupExp.size * 8,
-        s"contaminated=${contamGot.size}==${contamExp.size} nearDups=$dupFound/${dupExp.size}")
-    }
-
-    // 7. EXACT-VERIFIED streaming dedup (A25): band-state candidates are
-    // verified by exact Jaccard against the staged shingle-set artifact
-    // before anything is dropped — the streamed verdicts EQUAL the batch
-    // pipeline's pair set, not approximately (scenario 6's estimate-only
-    // flags are floored at 80% recall; this stage closes the gap to ==).
-    {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      val corpus = graft.Tables.documents(spark, sfDir)
-      val grams = graft.operators.Dedup.shingleSets(corpus.select("doc_id", "text"))
-      val arriving = corpus.select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val src = MemoryStream[(Long, String)]
-      val q = EventsPipeline.nearDupStreamVerified(src.toDS(), grams)
-        .writeStream.format("memory").queryName("demo_verified_dedup")
-        .outputMode("append").start()
-      arriving.grouped(math.max(1, arriving.length / 2)).foreach { chunk =>
-        src.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      q.stop()
-      val got = spark.table("demo_verified_dedup")
-        .select("earlier_id", "doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // same projected frame as shingleSets above: a differing projection
-      // would give docMinhashStats a second analyzed plan and run the
-      // whole shingle/minhash pipeline twice
-      val exp = graft.operators.Dedup.nearDupPairs(corpus.select("doc_id", "text"))
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      check("streaming-verified-dedup", exp.nonEmpty && got == exp,
-        s"pairs=${got.size}==${exp.size}")
-    }
-
-    // 8. REAL multimodal decode (F2/F4/F6 with actual pixels): encoded
-    // PNGs flow through the batched-decode seam on executors and come
-    // back as real 8x8 pooled features; a resize re-encodes at the
-    // target dims; the perceptual dHash of a noise-perturbed re-encode
-    // stays inside m6's hamming<=3 band budget. Text payloads in the
-    // same column degrade to the declared stub — the mixed/dirty-column
-    // contract a 100 TB payload scan needs.
-    {
-      import spark.implicits._
-      val png = graft.operators.ImageCodec.encodeGrayPng _
-      val imgs = (0 until 8).map(k =>
-        (k.toLong, png(128, 96)((x, y) => (x * (3 + k) + y * (7 + k)) % 256)))
-      val mixed = imgs ++ Seq((100L, "not an image".getBytes("UTF-8")))
-      val feats = graft.operators.Multimodal.extractFeaturesBatched(
-          mixed.toDF("doc_id", "payload"), batchSize = 4,
-          decoder = graft.operators.ImageCodec.batchFeaturesOrStub)
-        .collect().map(r => r.getLong(0) -> r.getSeq[Float](2).length).toMap
-      val realOk = imgs.forall { case (id, _) => feats(id) == 64 } && feats(100L) == 8
-      val resized = graft.operators.ImageCodec.resizeImage(imgs.head._2, 64, 48)
-      val resizeOk = resized.exists { b =>
-        val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
-        back.getWidth == 64 && back.getHeight == 48
-      }
-      val noisy = png(128, 96)((x, y) => (x * 3 + y * 7) % 256 + ((x + y) % 3 - 1))
-      val dh = for {
-        a <- graft.operators.ImageCodec.dhashFromImage(imgs.head._2)
-        n <- graft.operators.ImageCodec.dhashFromImage(noisy)
-      } yield java.lang.Long.bitCount(a ^ n)
-      check("image-decode-real",
-        realOk && resizeOk && dh.exists(_ <= 3),
-        s"decoded=${imgs.size} mixedFallback=${feats(100L) == 8} resize64x48=$resizeOk dhashNoiseBits=${dh.getOrElse(-1)}")
-    }
-
-    // 9. Write-audit-publish release gate (G16): the corpus-cleaning
-    // chain's output goes through the WAP protocol — a deliberately
-    // dirtied snapshot quarantines (pointer untouched), the clean one
-    // publishes, and readers see exactly the published version.
-    {
-      import org.apache.spark.sql.functions._
-      val root = Files.createTempDirectory("graft-demo-wap").toString
-      val cleaned = graft.Tables.documents(spark, sfDir)
-        .filter(graft.operators.TextAnalysis.qualityScore(col("text")) >= 0.61)
-        .select(col("doc_id"), col("text"))
-      val audit = graft.operators.Publish.columnAudit(
-        "doc_id_not_null" -> col("doc_id").isNull,
-        "text_not_empty" -> (col("text").isNull || length(col("text")) === 0))
-      val dirty = cleaned.select(col("doc_id"), lit("").as("text"))
-      val r1 = graft.operators.Publish.writeAuditPublish(dirty, root, audit, "rel-1")
-      val quarantined = !r1.published &&
-        graft.operators.Publish.currentVersion(spark, root).isEmpty
-      val r2 = graft.operators.Publish.writeAuditPublish(cleaned, root, audit, "rel-2")
-      val nPub = graft.operators.Publish.readPublished(spark, root).count()
-      check("write-audit-publish",
-        quarantined && r2.published && r2.version.contains(1L) && nPub == cleaned.count(),
-        s"quarantined=$quarantined version=${r2.version.getOrElse(-1L)} rows=$nPub")
-    }
-
-    // 10. Streaming SCD2 maintenance (A31): order events arrive over
-    // three micro-batches; the maintained dimension (latest emission per
-    // customer+version) must equal the batch islands build exactly.
-    {
-      import spark.implicits._
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val orders = graft.Tables.orders(spark, sfDir)
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-        .as[EventsPipeline.OrderRow].collect()
-        .filter(_.o_custkey % 53 == 0)
-        .sortBy(r => (r.o_orderdate.getTime, r.o_orderkey))
-      val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventsPipeline.OrderRow]
-      val q = EventsPipeline.scd2Stream(src.toDS())
-        .writeStream.format("memory").queryName("demo_scd2")
-        .outputMode("update").start()
-      val streamed =
-        try {
-          val third = math.max(1, orders.length / 3)
-          orders.grouped(third).foreach { slice =>
-            src.addData(slice.toIndexedSeq: _*); q.processAllAvailable()
-          }
-          spark.table("demo_scd2").as[EventsPipeline.ScdSpanUpdate].collect()
-            .groupBy(u => (u.c_custkey, u.version))
-            .map { case (_, us) => us.maxBy(_.seq) }
-            .map(u => (u.c_custkey, u.version, u.priority,
-              u.effective_from.toString, u.effective_to.map(_.toString), u.n_orders))
-            .toSet
-        } finally q.stop()
-      val custs = orders.map(_.o_custkey).toSet
-      val batch = graft.operators.Relational
-        .scd2Dimension(graft.Tables.orders(spark, sfDir))
-        .filter(org.apache.spark.sql.functions.col("c_custkey").isin(custs.toSeq: _*))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getDate(3).toString, Option(r.getDate(4)).map(_.toString), r.getLong(5)))
-        .toSet
-      check("streaming-scd2",
-        streamed == batch && streamed.nonEmpty,
-        s"spans=${streamed.size} batchSpans=${batch.size} equal=${streamed == batch}")
     }
 
     // 11. The ingest LIFECYCLE end to end (A32 -> G17): stream docs
@@ -427,31 +138,6 @@ object Demo {
           served == landed,
         s"landed=${landed.toSeq.sorted.mkString(",")} quarantined=$quarantined " +
           s"compactedV=${compacted.version.getOrElse(-1L)} served=${served.size}")
-    }
-
-    // 12. The versioned ANN-index lifecycle (s7): build + WAP-publish
-    // the PQ index once, query it many times from the published bytes —
-    // top-k from the artifact must match top-k from an in-session
-    // build of the same books/codes (the artifact IS the index).
-    {
-      import org.apache.spark.sql.functions._
-      val root = Files.createTempDirectory("graft-demo-pqindex").toString
-      val e = graft.Tables.spread(graft.Tables.embeddings(spark, sfDir))
-      val (br, cr) = graft.operators.Similarity.publishPqIndex(e, root, "demo-build")
-      val queries = graft.Tables.embeddings(spark, sfDir).filter(col("vec_id") < 5)
-      val top =
-        if (br.published && cr.published)
-          graft.operators.Similarity.pqTopKFromIndex(spark, root, e, queries, k = 3, refine = 30)
-            .collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      val perQueryOk = top.nonEmpty && top.groupBy(_.getLong(0)).forall {
-        case (_, rows) => rows.map(_.getLong(1)).sorted.sameElements(1L to rows.length)
-      }
-      check("ann-index-lifecycle",
-        br.published && cr.published && br.version.contains(1L) &&
-          cr.version.contains(1L) && perQueryOk,
-        s"booksV=${br.version.getOrElse(-1L)} codesV=${cr.version.getOrElse(-1L)} " +
-          s"queries=${top.map(_.getLong(0)).distinct.length} rows=${top.length}")
     }
 
     // 13. Streaming CDC materialization (A42): a change log streams in
@@ -636,59 +322,6 @@ object Demo {
           s"batchEqual=${streamedUrls == batchUrls}")
     }
 
-    // 17. The round-12 SURGICAL location-PII gate on a STREAM: arriving
-    // image payloads (planted GPS+orientation JPEGs in both byte
-    // orders, orientation-only JPEGs, raw text) pass
-    // scrubExifGpsSurgical (A54 — stateless row-local TIFF rebuild, the
-    // A53 class) and only gps_after=FALSE rows ship. Contract checked:
-    // every admitted row is GPS-free, the GPS class loses EXACTLY its
-    // 18 surgical bytes while its planted orientation SURVIVES, non-GPS
-    // payloads are byte-identical (bytes_removed == 0), and the
-    // streamed frame equals the batch run on the same rows across
-    // micro-batch slicings.
-    {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      import graft.operators.{ImageCodec, Multimodal => M}
-      val fixture = (1L to 60L).map { id =>
-        val base = ImageCodec.encodeGrayJpeg((1 + id % 9).toInt, (1 + id % 7).toInt)(
-          (x, y) => ((x * 11 + y * 17 + id) % 256).toInt)
-        val payload = (id % 3) match {
-          case 0 => M.spliceExif(base, (1 + id % 8).toInt, littleEndian = id % 2 == 0, gps = true)
-          case 1 => M.spliceExif(base, (1 + id % 8).toInt, littleEndian = id % 2 == 0, gps = false)
-          case _ => s"caption text $id".getBytes("UTF-8")
-        }
-        (id, payload)
-      }
-      val src = MemoryStream[(Long, Array[Byte])]
-      val q = M.scrubExifGpsSurgical(src.toDS().toDF("doc_id", "payload"))
-        .filter(!col("gps_after"))
-        .writeStream.format("memory").queryName("demo_pii_gate")
-        .outputMode("append").start()
-      try {
-        val (a, b) = fixture.splitAt(fixture.length / 2)
-        src.addData(a: _*); q.processAllAvailable()
-        src.addData(b: _*); q.processAllAvailable()
-      } finally q.stop()
-      def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getBoolean(1),
-        r.getLong(2), r.getString(3), r.getBoolean(4), r.getLong(5))
-      val streamed = spark.table("demo_pii_gate").collect().map(key)
-      val batch = M.scrubExifGpsSurgical(fixture.toDF("doc_id", "payload"))
-        .filter(!col("gps_after")).collect().map(key)
-      val gpsClass = streamed.filter(_._2)
-      val cleanJpegs = streamed.filter(r => r._1 % 3 == 1)
-      check("streaming-pii-gate",
-        streamed.length == fixture.length && // the gate admits everything POST-scrub
-          streamed.toSet == batch.toSet &&
-          streamed.forall(!_._5) &&
-          gpsClass.nonEmpty && gpsClass.forall(r =>
-            r._3 == 18L && r._6 == 1 + r._1 % 8) &&
-          cleanJpegs.nonEmpty && cleanJpegs.forall(r =>
-            r._3 == 0L && r._6 == 1 + r._1 % 8),
-        s"admitted=${streamed.length}/${fixture.length} gps=${gpsClass.length} " +
-          s"orientationSurvived=${gpsClass.forall(r => r._6 == 1 + r._1 % 8)}")
-    }
-
     // 18. The FULL acquisition path, container to corpus, on a STREAM
     // (round 12): real .warc files land in a directory; warcDirStream
     // tails them (bounded files/trigger), warcRecords splits them
@@ -759,55 +392,6 @@ object Demo {
           !streamed.exists(_.contains("utm_source")),
         s"admitted=${streamedRows.size} distinct=${streamed.size} " +
           s"batchEqual=${streamed == batch} dupAdmissions=$dupAdmissions")
-    }
-
-    // 19. Live telemetry anomaly watch: events stream through the
-    // left-matrix-profile processor (A57); a window whose nearest
-    // PRECEDING neighbor is far is an anomaly the moment it completes
-    // (append-only — an alert never needs retracting). A planted spike
-    // among calm repeats must alert, and the streamed rows must equal
-    // the batch q62 profile exactly.
-    {
-      import spark.implicits._
-      val saved = EventsPipeline.RocksDBStateStore.keys
-        .map(k => k -> spark.conf.getOption(k)).toMap
-      EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val calm = Seq(1.0, 2.0, 1.0, 2.0)
-        // user 7: calm, calm, SPIKE, calm, calm — the spike window's
-        // left-NN distance towers over the calm-vs-calm ~0 floor
-        val vals = calm ++ calm ++ Seq(90.0, -80.0, 70.0, -60.0) ++ calm ++ calm
-        val rows = vals.zipWithIndex.map { case (v, i) => ((i + 1).toLong, 7L, v) }
-        val src = MemoryStream[(Long, Long, Double)]
-        val q = EventsPipeline.tsLeftProfileTws(src.toDS(), L = 4, stride = 4,
-            horizon = 20)
-          .writeStream.format("memory").queryName("demo_tsleft")
-          .outputMode("update").start()
-        try {
-          rows.grouped(5).foreach { chunk =>
-            src.addData(chunk.toIndexedSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val streamed = spark.table("demo_tsleft").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        val alerts = streamed.filter(_._4 > 100.0).map(_._2).toSet
-        val batch = graft.operators.Relational.tsLeftProfile(
-            rows.map { case (e, u, v) => (u, e, v) }
-              .toDF("user_id", "event_id", "value"), L = 4, stride = 4,
-            horizon = 20)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        // the spike window (start 9) AND its successor (start 13, whose
-        // nearest predecessor set contains the spike but also calm
-        // windows -> calm wins, no alert) pin the semantics
-        check("streaming-telemetry-anomaly",
-          alerts == Set(9L) && streamed.toSet == batch.toSet &&
-            streamed.length == streamed.map(_._2).distinct.length,
-          s"alerts=$alerts streamed=${streamed.length} batchEqual=${streamed.toSet == batch.toSet}")
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
 
     // 20. Crawl-frontier prioritization: the acquisition loop CLOSED —
@@ -1003,51 +587,6 @@ object Demo {
           s"plantedAcos=${postP.map(_._2).mkString(",")} max=$maxAcos")
     }
 
-    // 24. LIVE REGIME-CHANGE ALERT (A63 end to end): a telemetry series
-    // switches generating regime mid-stream (period-3 sawtooth -> flat);
-    // the one-sided FLOSS curve dips where arcs stop crossing, and the
-    // A63 detector — threshold + exclusion-zone minima over finalized
-    // curve points, bounded state — raises its alert at the planted
-    // flip, online, with no batch job in the loop. The alert set is also
-    // cross-checked against the batch q67 operator on the same series.
-    {
-      import spark.implicits._
-      // regime A: sawtooth of period 3; regime B: flat — windows inside
-      // one regime find close left-neighbors (arcs), windows straddling
-      // the flip don't, so crossings collapse at the boundary
-      val n = 160
-      val flip = 80
-      val series = (1 to n).map { t =>
-        val v = if (t <= flip) (t % 3).toDouble else 9.0
-        (t.toLong, 1L, v)
-      }
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.tsFlossAlertsTws(src.toDS(), L = 8, stride = 4,
-          horizon = 16, threshold = 0.7, zone = 3)
-        .writeStream.format("memory").queryName("demo_regime_alerts")
-        .outputMode("update").start()
-      val streamed =
-        try {
-          series.grouped(40).foreach { chunk =>
-            src.addData(chunk.toIndexedSeq: _*)
-            q.processAllAvailable()
-          }
-          spark.table("demo_regime_alerts").collect()
-            .map(r => (r.getLong(1), r.getDouble(3))).toSeq.sortBy(_._1)
-        } finally q.stop()
-      val batchDf = series.toDF("event_id", "user_id", "value")
-      val batch = graft.operators.Relational.tsFlossRegimeBoundaries(
-          batchDf, L = 8, stride = 4, horizon = 16,
-          threshold = 0.7, zone = 3)
-        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq.sortBy(_._1)
-      // the flip at position 80 sits between window indices: the planted
-      // boundary is around index (flip - L + 1 - 1)/stride ≈ 18
-      val plantedHit = streamed.exists(a => math.abs(a._1 - 18L) <= 2)
-      check("live-regime-change-alert",
-        streamed.nonEmpty && streamed == batch && plantedHit,
-        s"alerts=${streamed.mkString(",")} batchEqual=${streamed == batch}")
-    }
-
     // 25. LIVE PROFILE MAINTENANCE (B68/B73 end to end): the nightly
     // matrix-profile artifact + STAMPI refresh. History is a period-4
     // sawtooth (stride == period, so every window has an exact twin —
@@ -1091,82 +630,6 @@ object Demo {
         s"pre=(${pre.getLong(1)},${pre.getDouble(3)}) " +
           s"post=(${post.getLong(1)},${post.getDouble(3)}) " +
           s"refreshEqualsRebuild=${refreshed == rebuilt}")
-    }
-
-    // 26. LIVE PERIOD-SHIFT MONITOR (A65/B74 end to end): a telemetry
-    // series changes its dominant cycle mid-stream (period-3 sawtooth →
-    // period-5 pattern); the streaming ACF monitor's live estimate reads
-    // 3 while the old regime dominates and flips to 5 once the new
-    // regime's pair mass outweighs it — online, bounded state, and the
-    // final estimate is bit-equal to the batch q74 operator on the same
-    // series (the twin contract, live).
-    {
-      import spark.implicits._
-      val p3 = Seq(0.0, 9.0, 3.0)
-      val p5 = Seq(1.0, 7.0, 2.0, 9.0, 4.0)
-      val series = (1 to 300).map { t =>
-        val v = if (t <= 60) p3((t - 1) % 3) else p5((t - 61) % 5)
-        (t.toLong, 1L, v)
-      }
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.acfPeriodTws(src.toDS(), maxLag = 8)
-        .writeStream.format("memory").queryName("demo_period_monitor")
-        .outputMode("update").start()
-      val emitted =
-        try {
-          series.grouped(60).foreach { chunk =>
-            src.addData(chunk.toIndexedSeq: _*)
-            q.processAllAvailable()
-          }
-          spark.table("demo_period_monitor").collect()
-            .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
-            .sortBy(_._1)
-        } finally q.stop()
-      val at60 = emitted.find(_._1 == 60L).get
-      val fin = emitted.last
-      val batch = graft.operators.Relational.tsAcf(
-          series.toDF("event_id", "user_id", "value"), maxLag = 8)
-        .filter(org.apache.spark.sql.functions.col("is_period"))
-        .collect().map(r => (r.getLong(1), r.getDouble(2))).head
-      check("live-period-shift-monitor",
-        at60._2 == 3L && fin._1 == 300L && fin._2 == 5L &&
-          (fin._2, fin._3) == batch,
-        s"at60=(${at60._2},${at60._3}) final=(${fin._2},${fin._3}) " +
-          s"batch=$batch")
-    }
-
-    // 27. LIVE MEAN-SHIFT ALARM (A67/B80 end to end): telemetry holds
-    // at its baseline, shifts up past the CUSUM allowance mid-stream,
-    // and the sequential detector raises exactly ONE alarm at the
-    // integer-exact evidence-crossing position (p=47, S=14.00) — while
-    // the evidence is still accumulating, with five scalars of state.
-    // The alarm set equals batch q80 on the same series.
-    {
-      import spark.implicits._
-      val series = (1 to 80).map { t =>
-        (t.toLong, 1L, if (t <= 40) 5.0 else 9.0)
-      }
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.cusumAlarmsTws(src.toDS())
-        .writeStream.format("memory").queryName("demo_cusum_alarm")
-        .outputMode("update").start()
-      val (mid, fin) =
-        try {
-          src.addData(series.take(44).toIndexedSeq: _*)
-          q.processAllAvailable()
-          val m = spark.table("demo_cusum_alarm").count()
-          src.addData(series.drop(44).toIndexedSeq: _*)
-          q.processAllAvailable()
-          val f = spark.table("demo_cusum_alarm").collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-          (m, f)
-        } finally q.stop()
-      val batch = graft.operators.Relational.tsCusumAlarms(
-          series.toDF("event_id", "user_id", "value")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      check("live-mean-shift-alarm",
-        mid == 0L && fin == Seq((1L, 47L, 14.0)) && fin == batch,
-        s"preAlarmCount=$mid alarms=$fin batch=$batch")
     }
 
     results.toList

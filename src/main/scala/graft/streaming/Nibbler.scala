@@ -78,6 +78,13 @@ final case class NibblerConfig[T](
     processor: (Trigger, Seq[T]) => Unit = null,
     size: Int = 0,
     tickerDuration: Duration = Duration.Zero,
+    /** Deadline for one processor invocation; past it the batch goes to
+      * the error path and the [[BatchContext]] is cancelled. A processor
+      * that ignores cancellation keeps running, and, as in the
+      * reference's listen loop, the nibbler blocks until it returns: the
+      * ticker and the drain wait, and once `receiverCapacity` items are
+      * un-drained producers block too. <= 0 means the 1 s default.
+      */
     processingTimeout: Duration = Duration.Zero,
     resumeAfterErr: Boolean = false,
     onError: (Seq[T], Throwable) => Unit = null,

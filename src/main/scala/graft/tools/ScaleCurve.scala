@@ -236,19 +236,21 @@ object ScaleCurve {
           probes = 2)))
 
     val factors = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxF).toSeq
-    def runPoints(name: String, fmax: Int, mk: Int => DataFrame): Unit =
-      if (opFilter(name)) factors.filter(_ <= fmax).foreach { f =>
-        // warm min-of-2: first run pays scan cache/codegen, min absorbs it
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = mk(f).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          (n, dt)
-        }
-        val rows = times.head._1
-        println(f"[scale] $name%-22s f=$f rows=$rows%9d ${times.map(_._2).min}%7.2f s")
+    // Warm min-of-2 through the bench's one timed action (the noop sink
+    // computes every column; count() would let Catalyst prune work): the
+    // first run pays scan cache and codegen, the min absorbs it. Rows are
+    // counted after the timed runs.
+    def point(name: String, label: String, mk: => DataFrame): Unit = {
+      val ts = (1 to 2).map(_ => graft.Bench.timeOnce(spark, sfDir, name, (_, _) => mk))
+      if (ts.exists(_ < 0)) println(f"[scale] $name%-22s $label FAILED")
+      else {
+        val rows = mk.count()
+        spark.catalog.clearCache()
+        println(f"[scale] $name%-22s $label rows=$rows%9d ${ts.min}%7.2f s")
       }
+    }
+    def runPoints(name: String, fmax: Int, mk: Int => DataFrame): Unit =
+      if (opFilter(name)) factors.filter(_ <= fmax).foreach(f => point(name, s"f=$f", mk(f)))
 
     ops.foreach { case (name, mk) => runPoints(name, maxF, mk) }
     ops13.foreach { case (name, fmax, mk) => runPoints(name, fmax, mk) }
@@ -328,15 +330,9 @@ object ScaleCurve {
       require(rs.size == 3 && rs.forall(_.published), s"s9 publish failed at f=$f")
       println(f"[scale] s8_index_build        f=$f rows=${2000L * f}%9d ${(System.nanoTime() - tb) / 1e9}%7.2f s")
       val q = e.filter(col("vec_id") < 10) // the base copy's first 10 ids
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = Similarity.ivfPqTopKFromIndex(spark, root, e, q,
-          k = 5, refine = 200, nProbe = 4).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (n, dt)
-      }
-      println(f"[scale] s9_index_read         f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+      point("s9_index_read", s"f=$f",
+        Similarity.ivfPqTopKFromIndex(spark, root, e, q,
+          k = 5, refine = 200, nProbe = 4))
       e.unpersist()
     }
 
@@ -360,15 +356,9 @@ object ScaleCurve {
       require(rs.size == 3 && rs.forall(_.published), s"s13 publish failed at f=$f")
       println(f"[scale] s13_attr_build        f=$f rows=${2000L * f}%9d ${(System.nanoTime() - tb) / 1e9}%7.2f s")
       val q = e.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = Similarity.ivfPqTopKFromIndexWhere(spark, root, e, q,
-          k = 5, refine = 200, nProbe = 6, col("label") === 1).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (n, dt)
-      }
-      println(f"[scale] s13_filtered_read     f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+      point("s13_filtered_read", s"f=$f",
+        Similarity.ivfPqTopKFromIndexWhere(spark, root, e, q,
+          k = 5, refine = 200, nProbe = 6, col("label") === 1))
       e.unpersist()
     }
 
@@ -389,16 +379,7 @@ object ScaleCurve {
         token = s"scale-$f", L = 8, stride = 4)
       require(r.published, s"profile publish failed at f=$f")
       println(f"[scale] q68_profile_build     f=$f rows=${0L}%9d ${(System.nanoTime() - tb) / 1e9}%7.2f s")
-      def timeRead(name: String, mk: => DataFrame): Unit = {
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = mk.count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          (n, dt)
-        }
-        println(f"[scale] $name%-22s f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
-      }
+      def timeRead(name: String, mk: => DataFrame): Unit = point(name, s"f=$f", mk)
       import graft.operators.Relational._
       timeRead("q68_profile_read", readTsProfile(spark, root))
       timeRead("q69_discord_read", readTsProfile(spark, root)
@@ -421,16 +402,8 @@ object ScaleCurve {
       val ev = scaledEvents(maxF).persist()
       ev.count()
       Seq(1, 2, 4, 8).foreach { e =>
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = graft.operators.Relational
-            .tsMatrixProfileSampled(ev, L = 8, stride = 4, sampleEvery = e)
-            .count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          (n, dt)
-        }
-        println(f"[scale] q72_sample_knob       E=$e rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+        point("q72_sample_knob", s"E=$e", graft.operators.Relational
+          .tsMatrixProfileSampled(ev, L = 8, stride = 4, sampleEvery = e))
       }
       ev.unpersist()
     }
@@ -476,15 +449,9 @@ object ScaleCurve {
       require(rs.size == 3 && rs.forall(_.published), s"s14 publish failed at f=$f")
       println(f"[scale] s14_residual_build    f=$f rows=${2000L * f}%9d ${(System.nanoTime() - tb) / 1e9}%7.2f s")
       val q = e.filter(col("vec_id") < 10)
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = Similarity.ivfPqTopKFromIndex(spark, root, e, q,
-          k = 5, refine = 200, nProbe = 4).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (n, dt)
-      }
-      println(f"[scale] s14_residual_read     f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+      point("s14_residual_read", s"f=$f",
+        Similarity.ivfPqTopKFromIndex(spark, root, e, q,
+          k = 5, refine = 200, nProbe = 4))
       e.unpersist()
     }
 
@@ -499,14 +466,8 @@ object ScaleCurve {
         concat(lit("src"), pmod(col("id") / lit(5L * f), lit(4L))).as("source"),
         concat_ws(" ", (0 until 12).map(j =>
           concat(lit(s"w$j"), pmod(col("id") * (j + 3), lit(97L)))): _*).as("text"))
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = graft.operators.Pipeline.doremiSurprisalWeights(docs).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (n, dt)
-      }
-      println(f"[scale] p29_domains_grow      f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+      point("p29_domains_grow", s"f=$f",
+        graft.operators.Pipeline.doremiSurprisalWeights(docs))
     }
 
     if (opFilter("s11_index_read")) factors.foreach { f =>
@@ -518,15 +479,9 @@ object ScaleCurve {
       require(rs.size == 4 && rs.forall(_.published), s"s11 publish failed at f=$f")
       println(f"[scale] s11_opq_build         f=$f rows=${2000L * f}%9d ${(System.nanoTime() - tb) / 1e9}%7.2f s")
       val q = e.filter(col("vec_id") < 10)
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val n = Similarity.ivfPqTopKFromIndex(spark, root, e, q,
-          k = 5, refine = 200, nProbe = 4).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (n, dt)
-      }
-      println(f"[scale] s11_index_read        f=$f rows=${times.head._1}%9d ${times.map(_._2).min}%7.2f s")
+      point("s11_index_read", s"f=$f",
+        Similarity.ivfPqTopKFromIndex(spark, root, e, q,
+          k = 5, refine = 200, nProbe = 4))
       e.unpersist()
     }
     spark.stop()

@@ -272,41 +272,42 @@ class EventsPipelineSpec extends SparkSpec {
   test("transformWithState session tracker matches mapGroupsWithState answers") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     // state v2 runs only on the RocksDB provider
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val source = MemoryStream[EventsPipeline.Event]
-    def ev(id: Long, user: Long, minute: Long) =
-      EventsPipeline.Event(id, new Timestamp(minute * 60000L), user, "click", 1.0)
-    val q = EventsPipeline.sessionTrackerTws(source.toDS())
-      .writeStream.format("memory").queryName("tws_sessions_test")
-      .outputMode("update").start()
-    try {
-      // identical scenario to the A15 sessionTracker spec: the v2 API must
-      // produce the same per-user session counts
-      source.addData(ev(1, 1, 0), ev(2, 1, 5), ev(3, 1, 65), ev(4, 2, 0))
-      q.processAllAvailable()
-      val out = spark.table("tws_sessions_test")
-        .orderBy("user_id").as[EventsPipeline.SessionUpdate].collect()
-      assert(out.toSeq == Seq(
-        EventsPipeline.SessionUpdate(1, 2, 3),
-        EventsPipeline.SessionUpdate(2, 1, 1)))
-      // ValueState persists across micro-batches: 10 min after user 1's
-      // last event -> same session, counts continue from state. n_events
-      // grows monotonically, so the max row IS the latest update (no
-      // reliance on the memory sink preserving batch order).
-      source.addData(ev(5, 1, 75))
-      q.processAllAvailable()
-      val upd = spark.table("tws_sessions_test")
-        .filter($"user_id" === 1).orderBy($"n_events")
-        .as[EventsPipeline.SessionUpdate].collect()
-      assert(upd.last == EventsPipeline.SessionUpdate(1, 2, 4))
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val source = MemoryStream[EventsPipeline.Event]
+      def ev(id: Long, user: Long, minute: Long) =
+        EventsPipeline.Event(id, new Timestamp(minute * 60000L), user, "click", 1.0)
+      val q = EventsPipeline.sessionTrackerTws(source.toDS())
+        .writeStream.format("memory").queryName("tws_sessions_test")
+        .outputMode("update").start()
+      try {
+        // identical scenario to the A15 sessionTracker spec: the v2 API must
+        // produce the same per-user session counts
+        source.addData(ev(1, 1, 0), ev(2, 1, 5), ev(3, 1, 65), ev(4, 2, 0))
+        q.processAllAvailable()
+        val out = spark.table("tws_sessions_test")
+          .orderBy("user_id").as[EventsPipeline.SessionUpdate].collect()
+        assert(out.toSeq == Seq(
+          EventsPipeline.SessionUpdate(1, 2, 3),
+          EventsPipeline.SessionUpdate(2, 1, 1)))
+        // ValueState persists across micro-batches: 10 min after user 1's
+        // last event -> same session, counts continue from state. n_events
+        // grows monotonically, so the max row IS the latest update (no
+        // reliance on the memory sink preserving batch order).
+        source.addData(ev(5, 1, 75))
+        q.processAllAvailable()
+        val upd = spark.table("tws_sessions_test")
+          .filter($"user_id" === 1).orderBy($"n_events")
+          .as[EventsPipeline.SessionUpdate].collect()
+        assert(upd.last == EventsPipeline.SessionUpdate(1, 2, 4))
+        // ...and the gap is measured against that carried state: an event
+        // 65 min after the previous batch's last one opens a new session
+        source.addData(ev(6, 1, 140))
+        q.processAllAvailable()
+        val split = spark.table("tws_sessions_test")
+          .filter($"user_id" === 1).orderBy($"n_events")
+          .as[EventsPipeline.SessionUpdate].collect()
+        assert(split.last == EventsPipeline.SessionUpdate(1, 3, 5))
+      } finally q.stop()
     }
   }
 
@@ -349,170 +350,162 @@ class EventsPipelineSpec extends SparkSpec {
   test("streaming EWMA (A48): final per-user state is bit-identical to batch q53 across slicings") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    // in-order feed (the declared log-replay regime): real corpus events
-    // sorted by event_id, sliced into 4 micro-batches
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val src = MemoryStream[(Long, Long, Double)]
-    val q = EventsPipeline.ewmaTws(src.toDS())
-      .writeStream.format("memory").queryName("ewma_tws_test")
-      .outputMode("update").start()
-    try {
-      rows.grouped(math.max(1, rows.length / 4)).foreach { chunk =>
-        src.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      // n grows monotonically per user, so max-n row IS the final state
-      val got = spark.table("ewma_tws_test")
-        .groupBy($"user_id")
-        .agg(max(struct($"n_events", $"ewma")).as("f"))
-        .select($"user_id", $"f.n_events", graft.operators.Num.r4($"f.ewma").as("ewma"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      val batch = graft.SparkEntry.queries("q53_ewma_by_user")(spark, sf)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      assert(got == batch, "streaming EWMA final state diverges from batch q53")
-      assert(batch.nonEmpty && batch.values.exists(_._1 > 1))
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val sf = "/root/testdata/sf0.001"
+      // in-order feed (the declared log-replay regime): real corpus events
+      // sorted by event_id, sliced into 4 micro-batches
+      val rows = Tables.events(spark, sf)
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val src = MemoryStream[(Long, Long, Double)]
+      val q = EventsPipeline.ewmaTws(src.toDS())
+        .writeStream.format("memory").queryName("ewma_tws_test")
+        .outputMode("update").start()
+      try {
+        rows.grouped(math.max(1, rows.length / 4)).foreach { chunk =>
+          src.addData(chunk.toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+        // n grows monotonically per user, so max-n row IS the final state
+        val got = spark.table("ewma_tws_test")
+          .groupBy($"user_id")
+          .agg(max(struct($"n_events", $"ewma")).as("f"))
+          .select($"user_id", $"f.n_events", graft.operators.Num.r4($"f.ewma").as("ewma"))
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+        val batch = graft.SparkEntry.queries("q53_ewma_by_user")(spark, sf)
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+        assert(got == batch, "streaming EWMA final state diverges from batch q53")
+        assert(batch.nonEmpty && batch.values.exists(_._1 > 1))
+      } finally q.stop()
     }
   }
 
   test("streaming ts windows (A56): streamed scores are bit-identical to batch q56 across slicings") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val query = (0 until 8).map(i => ((7 * i) % 13).toDouble)
-    // in-order feed (the declared log-replay regime), 5 micro-batches so
-    // windows SPAN batch boundaries — the state carry this twin exists for
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val src = MemoryStream[(Long, Long, Double)]
-    val q = EventsPipeline.tsWindowsTws(src.toDS(), query, stride = 4)
-      .writeStream.format("memory").queryName("tswin_tws_test")
-      .outputMode("update").start()
-    try {
-      rows.grouped(math.max(1, rows.length / 5)).foreach { chunk =>
-        src.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val full = spark.table("tswin_tws_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      // every window emits exactly once (stateful completion, no dups)
-      assert(full.length == full.map(r => (r._1, r._2)).distinct.length)
-      val got = full.map(r => (r._1, r._2, r._3))
-      val batch = graft.operators.Relational.tsSubsequenceScores(
-          Tables.events(spark, sf), query, stride = 4)
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val sf = "/root/testdata/sf0.001"
+      val query = (0 until 8).map(i => ((7 * i) % 13).toDouble)
+      // in-order feed (the declared log-replay regime), 5 micro-batches so
+      // windows SPAN batch boundaries — the state carry this twin exists for
+      val rows = Tables.events(spark, sf)
+        .select("event_id", "user_id", "value").orderBy("event_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(got.toSet == batch.toSet,
-        s"streamed=${got.length} batch=${batch.length}; " +
-          s"missing=${(batch.toSet -- got.toSet).take(3)} " +
-          s"extra=${(got.toSet -- batch.toSet).take(3)}")
-      assert(batch.nonEmpty, "fixture must produce complete windows")
-      // the z-normalized score (the UCR live-matcher form, r12 verdict
-      // item 5): bit-equal to q57's pre-top-k frame from the SAME state
-      val gotZ = full.map(r => (r._1, r._2, r._4))
-      val batchZ = graft.operators.Relational.tsZnormSubsequenceScores(
-          Tables.events(spark, sf), query, stride = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(gotZ.toSet == batchZ.toSet,
-        s"z-norm diverged: missing=${(batchZ.toSet -- gotZ.toSet).take(3)} " +
-          s"extra=${(gotZ.toSet -- batchZ.toSet).take(3)}")
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+      val src = MemoryStream[(Long, Long, Double)]
+      val q = EventsPipeline.tsWindowsTws(src.toDS(), query, stride = 4)
+        .writeStream.format("memory").queryName("tswin_tws_test")
+        .outputMode("update").start()
+      try {
+        rows.grouped(math.max(1, rows.length / 5)).foreach { chunk =>
+          src.addData(chunk.toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+        val full = spark.table("tswin_tws_test").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+        // every window emits exactly once (stateful completion, no dups)
+        assert(full.length == full.map(r => (r._1, r._2)).distinct.length)
+        val got = full.map(r => (r._1, r._2, r._3))
+        val batch = graft.operators.Relational.tsSubsequenceScores(
+            Tables.events(spark, sf), query, stride = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        assert(got.toSet == batch.toSet,
+          s"streamed=${got.length} batch=${batch.length}; " +
+            s"missing=${(batch.toSet -- got.toSet).take(3)} " +
+            s"extra=${(got.toSet -- batch.toSet).take(3)}")
+        assert(batch.nonEmpty, "fixture must produce complete windows")
+        // the z-normalized score (the UCR live-matcher form, r12 verdict
+        // item 5): bit-equal to q57's pre-top-k frame from the SAME state
+        val gotZ = full.map(r => (r._1, r._2, r._4))
+        val batchZ = graft.operators.Relational.tsZnormSubsequenceScores(
+            Tables.events(spark, sf), query, stride = 4)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        assert(gotZ.toSet == batchZ.toSet,
+          s"z-norm diverged: missing=${(batchZ.toSet -- gotZ.toSet).take(3)} " +
+            s"extra=${(gotZ.toSet -- batchZ.toSet).take(3)}")
+      } finally q.stop()
     }
   }
 
   test("streaming left matrix profile (A57): streamed rows bit-identical to batch q62 across slicings; state bounded") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val src = MemoryStream[(Long, Long, Double)]
-    val q = EventsPipeline.tsLeftProfileTws(src.toDS(), L = 8, stride = 4,
-        horizon = 40)
-      .writeStream.format("memory").queryName("tsleft_tws_test")
-      .outputMode("update").start()
-    try {
-      rows.grouped(math.max(1, rows.length / 5)).foreach { chunk =>
-        src.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
+    withConf(EventsPipeline.RocksDBStateStore) {
+      def twin(rows: Seq[(Long, Long, Double)], L: Int, horizon: Int, chunk: Int,
+          name: String): Array[(Long, Long, Long, Double)] = {
+        val src = MemoryStream[(Long, Long, Double)]
+        val q = EventsPipeline.tsLeftProfileTws(src.toDS(), L = L, stride = 4,
+            horizon = horizon)
+          .writeStream.format("memory").queryName(name)
+          .outputMode("update").start()
+        val got =
+          try {
+            rows.grouped(chunk).foreach { c =>
+              src.addData(c: _*)
+              q.processAllAvailable()
+            }
+            spark.table(name).collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+          } finally q.stop()
+        // append-only: each window emits at most once, and its left-NN is
+        // final at completion (the property that makes this the
+        // STREAMABLE profile — no retractions to reconcile)
+        assert(got.length == got.map(r => (r._1, r._2)).distinct.length)
+        val batch = graft.operators.Relational.tsLeftProfile(
+            rows.toDF("event_id", "user_id", "value"), L = L, stride = 4,
+            horizon = horizon)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        assert(batch.nonEmpty && got.toSet == batch.toSet,
+          s"streamed=${got.length} batch=${batch.length}; " +
+            s"missing=${(batch.toSet -- got.toSet).take(3)} " +
+            s"extra=${(got.toSet -- batch.toSet).take(3)}")
+        got
       }
-      val got = spark.table("tsleft_tws_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      // append-only: each window emits at most once, and its left-NN is
-      // final at completion (the property that makes this the
-      // STREAMABLE profile — no retractions to reconcile)
-      assert(got.length == got.map(r => (r._1, r._2)).distinct.length)
-      val batch = graft.operators.Relational.tsLeftProfile(
-          Tables.events(spark, sf), L = 8, stride = 4, horizon = 40)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      assert(batch.nonEmpty && got.toSet == batch.toSet,
-        s"streamed=${got.length} batch=${batch.length}; " +
-          s"missing=${(batch.toSet -- got.toSet).take(3)} " +
-          s"extra=${(got.toSet -- batch.toSet).take(3)}")
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+      val rows = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      twin(rows, L = 8, horizon = 40, math.max(1, rows.length / 5), "tsleft_tws_test")
+      // user 7: calm, calm, SPIKE, calm, calm. The spike window (start 9)
+      // alerts the moment it completes: its left-NN distance towers over
+      // the calm-vs-calm ~0 floor. Its successor (start 13) has calm
+      // windows among its predecessors, so calm wins and it stays quiet.
+      val calm = Seq(1.0, 2.0, 1.0, 2.0)
+      val spiked = (calm ++ calm ++ Seq(90.0, -80.0, 70.0, -60.0) ++ calm ++ calm)
+        .zipWithIndex.map { case (v, i) => ((i + 1).toLong, 7L, v) }
+      val alerts = twin(spiked, L = 4, horizon = 20, 5, "tsleft_tws_spike")
+        .filter(_._4 > 100.0).map(_._2).toSet
+      assert(alerts == Set(9L), s"alerts=$alerts")
     }
   }
 
   test("streaming FLOSS (A62): one-sided CAC emissions bit-identical to batch q65 across slicings") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // q65's batch frame: the trusted interior IS the finalization set, so
-    // the streamed emissions must equal it row-for-row, not just overlap
-    val batch = graft.operators.Relational.tsFlossCac1(
-        Tables.events(spark, sf), L = 8, stride = 4, horizon = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(batch.nonEmpty, "fixture must produce trusted boundaries")
-    def runSliced(chunks: Int, name: String): Array[(Long, Long, Long, Double)] = {
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.tsFlossCac1Tws(src.toDS(), L = 8, stride = 4,
-          horizon = 16)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / chunks)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      } finally q.stop()
-    }
-    try {
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val sf = "/root/testdata/sf0.001"
+      val rows = Tables.events(spark, sf)
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      // q65's batch frame: the trusted interior IS the finalization set, so
+      // the streamed emissions must equal it row-for-row, not just overlap
+      val batch = graft.operators.Relational.tsFlossCac1(
+          Tables.events(spark, sf), L = 8, stride = 4, horizon = 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      assert(batch.nonEmpty, "fixture must produce trusted boundaries")
+      def runSliced(chunks: Int, name: String): Array[(Long, Long, Long, Double)] = {
+        val src = MemoryStream[(Long, Long, Double)]
+        val q = EventsPipeline.tsFlossCac1Tws(src.toDS(), L = 8, stride = 4,
+            horizon = 16)
+          .writeStream.format("memory").queryName(name)
+          .outputMode("update").start()
+        try {
+          rows.grouped(math.max(1, rows.length / chunks)).foreach { chunk =>
+            src.addData(chunk.toIndexedSeq: _*)
+            q.processAllAvailable()
+          }
+          spark.table(name).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        } finally q.stop()
+      }
       Seq(5 -> "tsfloss_tws_5", 13 -> "tsfloss_tws_13").foreach {
         case (chunks, name) =>
           val got = runSliced(chunks, name)
@@ -524,62 +517,61 @@ class EventsPipelineSpec extends SparkSpec {
               s"missing=${(batch.toSet -- got.toSet).take(3)} " +
               s"extra=${(got.toSet -- batch.toSet).take(3)}")
       }
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 
   test("streaming regime alerts (A63): online-decidable extraction bit-identical to batch q67 across slicings") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // the batch twin restricts itself to ONLINE-DECIDABLE rows (full
-    // following zone inside the trusted interior), so equality is exact
-    val batch = graft.operators.Relational.tsFlossRegimeBoundaries(
-        Tables.events(spark, sf), L = 8, stride = 4, horizon = 16,
-        threshold = 0.8, zone = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(batch.nonEmpty, "fixture must produce alert rows")
-    def runSliced(chunks: Int, name: String): Array[(Long, Long, Long, Double)] = {
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.tsFlossAlertsTws(src.toDS(), L = 8, stride = 4,
-          horizon = 16, threshold = 0.8, zone = 3)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / chunks)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      } finally q.stop()
-    }
-    try {
-      Seq(5 -> "tsalert_tws_5", 13 -> "tsalert_tws_13").foreach {
-        case (chunks, name) =>
-          val got = runSliced(chunks, name)
+    withConf(EventsPipeline.RocksDBStateStore) {
+      def runSliced(rows: Seq[(Long, Long, Double)], chunk: Int, threshold: Double,
+          name: String): Array[(Long, Long, Long, Double)] = {
+        val src = MemoryStream[(Long, Long, Double)]
+        val q = EventsPipeline.tsFlossAlertsTws(src.toDS(), L = 8, stride = 4,
+            horizon = 16, threshold = threshold, zone = 3)
+          .writeStream.format("memory").queryName(name)
+          .outputMode("update").start()
+        try {
+          rows.grouped(chunk).foreach { c =>
+            src.addData(c: _*)
+            q.processAllAvailable()
+          }
+          spark.table(name).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        } finally q.stop()
+      }
+      // the batch twin restricts itself to ONLINE-DECIDABLE rows (full
+      // following zone inside the trusted interior), so equality is exact
+      def twin(rows: Seq[(Long, Long, Double)], threshold: Double, chunks: Seq[Int],
+          name: String): Array[(Long, Long, Long, Double)] = {
+        val batch = graft.operators.Relational.tsFlossRegimeBoundaries(
+            rows.toDF("event_id", "user_id", "value"), L = 8, stride = 4,
+            horizon = 16, threshold = threshold, zone = 3)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        assert(batch.nonEmpty, s"$name: fixture must produce alert rows")
+        chunks.foreach { chunk =>
+          val got = runSliced(rows, chunk, threshold, s"${name}_$chunk")
           assert(got.length == got.map(r => (r._1, r._2)).distinct.length,
-            s"duplicate alert emissions at $chunks slices")
+            s"duplicate alert emissions at $chunk rows per micro-batch")
           assert(got.toSet == batch.toSet,
-            s"[$chunks slices] streamed=${got.length} batch=${batch.length}; " +
+            s"[$chunk rows per micro-batch] streamed=${got.length} batch=${batch.length}; " +
               s"missing=${(batch.toSet -- got.toSet).take(3)} " +
               s"extra=${(got.toSet -- batch.toSet).take(3)}")
+        }
+        batch
       }
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+      val rows = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      twin(rows, threshold = 0.8,
+        Seq(5, 13).map(slices => math.max(1, rows.length / slices)), "tsalert_tws")
+      // a planted mid-stream regime change: a period-3 sawtooth flips to
+      // flat at position 80, so arcs stop crossing there and the alert
+      // lands on the window index (80 - L + 1 - 1) / stride = 18
+      val flip = (1 to 160).map(t => (t.toLong, 1L, if (t <= 80) (t % 3).toDouble else 9.0))
+      val planted = twin(flip, threshold = 0.7, Seq(40), "tsalert_tws_flip")
+      assert(planted.exists(a => math.abs(a._2 - 18L) <= 2),
+        s"no alert at the planted flip: ${planted.toSeq}")
     }
   }
 
@@ -937,6 +929,9 @@ class EventsPipelineSpec extends SparkSpec {
       assert(streamed.exists(r => r._1 == 4L && r._2 && r._3 == 18L && !r._5 && r._6 == 2L))
       // no-GPS class: byte-identical, orientation untouched
       assert(streamed.exists(r => r._1 == 2L && !r._2 && r._3 == 0L && r._6 == 7L))
+      // as an ingest gate (ship only gps_after = false) it admits every
+      // row, text payloads included: nothing leaves the scrub with GPS
+      assert(streamed.size == docs.size && streamed.forall(!_._5), s"streamed=$streamed")
     } finally q.stop()
   }
 
@@ -1520,40 +1515,33 @@ class EventsPipelineSpec extends SparkSpec {
 
   test("stateful dedup on the RocksDB state store: id-only dedup, metered and bounded state") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val src = MemoryStream[EventsPipeline.Event]
-    def ev(id: Long, minute: Long) =
-      EventsPipeline.Event(id, new Timestamp(minute * 60000L), 1L, "click", 1.0)
-    val q = EventsPipeline.dedupStream(src.toDS().toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("rocksdb_dedup_test")
-      .outputMode("append").start()
-    try {
-      // same id, DIFFERENT ts: still a duplicate (key is the id alone)
-      src.addData(ev(1, 100), ev(1, 101), ev(2, 100))
-      q.processAllAvailable()
-      src.addData(ev(3, 200)) // advances watermark past ids 1/2's horizon
-      q.processAllAvailable()
-      src.addData(ev(4, 210)) // next commit reports the eviction
-      q.processAllAvailable()
-      val ids = spark.table("rocksdb_dedup_test").select("event_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(ids.sameElements(Array(1L, 2L, 3L, 4L)), s"got ${ids.toSeq}")
-      val stateOps = q.recentProgress.flatMap(_.stateOperators)
-      assert(stateOps.nonEmpty)
-      // the RocksDB provider is genuinely in use: its custom metrics show up
-      assert(stateOps.exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))),
-        "no rocksdb custom metrics in stateOperators progress")
-      // bounded state: watermark passage actually evicted rows
-      assert(stateOps.exists(_.numRowsRemoved > 0),
-        s"no state eviction observed: ${stateOps.map(_.numRowsRemoved).toSeq}")
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val src = MemoryStream[EventsPipeline.Event]
+      def ev(id: Long, minute: Long) =
+        EventsPipeline.Event(id, new Timestamp(minute * 60000L), 1L, "click", 1.0)
+      val q = EventsPipeline.dedupStream(src.toDS().toDF(), watermark = "10 minutes")
+        .writeStream.format("memory").queryName("rocksdb_dedup_test")
+        .outputMode("append").start()
+      try {
+        // same id, DIFFERENT ts: still a duplicate (key is the id alone)
+        src.addData(ev(1, 100), ev(1, 101), ev(2, 100))
+        q.processAllAvailable()
+        src.addData(ev(3, 200)) // advances watermark past ids 1/2's horizon
+        q.processAllAvailable()
+        src.addData(ev(4, 210)) // next commit reports the eviction
+        q.processAllAvailable()
+        val ids = spark.table("rocksdb_dedup_test").select("event_id")
+          .collect().map(_.getLong(0)).sorted
+        assert(ids.sameElements(Array(1L, 2L, 3L, 4L)), s"got ${ids.toSeq}")
+        val stateOps = q.recentProgress.flatMap(_.stateOperators)
+        assert(stateOps.nonEmpty)
+        // the RocksDB provider is genuinely in use: its custom metrics show up
+        assert(stateOps.exists(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))),
+          "no rocksdb custom metrics in stateOperators progress")
+        // bounded state: watermark passage actually evicted rows
+        assert(stateOps.exists(_.numRowsRemoved > 0),
+          s"no state eviction observed: ${stateOps.map(_.numRowsRemoved).toSeq}")
+      } finally q.stop()
     }
   }
 
@@ -1640,148 +1628,136 @@ class EventsPipelineSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.EventsPipeline.{cdcApplyStream, CdcOp}
     import scala.math.BigDecimal.RoundingMode.HALF_UP
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    // q49's fixture change log, fed seq-ordered (the CDC commit-order
-    // contract) across three micro-batch slicings
-    val snap = Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
-    def p2(x: Double) = BigDecimal(x).setScale(2, HALF_UP)
-    val ops = (snap.filter(_._1 % 7 == 0).map { case (k, ck, st, p) =>
-        CdcOp(k, 1L, "U", ck, st,
-          (p2(p) * BigDecimal("1.10")).setScale(2, HALF_UP).toDouble) } ++
-      snap.filter(_._1 % 1000 == 1).map { case (k, ck, _, p) =>
-        CdcOp(k + 10000000L, 1L, "U", ck, "N", p2(p).toDouble) } ++
-      snap.filter(_._1 % 21 == 0).map { case (k, ck, st, p) =>
-        CdcOp(k, 2L, "U", ck, st, (p2(p) + 5).setScale(2, HALF_UP).toDouble) } ++
-      snap.filter(_._1 % 13 == 0).map { case (k, _, _, _) =>
-        CdcOp(k, 3L, "D", 0L, "", 0.0) }).sortBy(_.seq)
-    val src = MemoryStream[CdcOp]
-    val q = cdcApplyStream(src.toDS())
-      .writeStream.format("memory").queryName("cdc_mat_test")
-      .outputMode("append").start()
-    try {
-      ops.grouped(math.max(1, ops.length / 3)).foreach { chunk =>
-        src.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val view = spark.table("cdc_mat_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getLong(3),
-          r.getString(4), r.getDouble(5), r.getLong(6)))
-        .groupBy(_._1).map { case (k, rows) => k -> rows.maxBy(_._7) }
-      val batch = graft.SparkEntry.queries("q49_cdc_merge")(spark, sfDir).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getString(2), r.getDouble(3), r.getLong(4)))).toMap
-      val touched = ops.map(_.key).toSet
-      assert(touched.nonEmpty && view.keySet == touched,
-        "one materialized row per touched key, no extras")
-      touched.foreach { k =>
-        val (_, ver, deleted, ck, st, pr, _) = view(k)
-        if (k % 13 == 0 && k < 10000000L) {
-          assert(deleted && ver == 3L, s"key $k must materialize as a tombstone")
-          assert(!batch.contains(k), s"batch must have dropped deleted key $k")
-        } else {
-          assert(!deleted && batch(k) == ((ck, st, pr, ver)),
-            s"key $k: view ($ck,$st,$pr,$ver) != batch ${batch(k)}")
+    withConf(EventsPipeline.RocksDBStateStore) {
+      // q49's fixture change log, fed seq-ordered (the CDC commit-order
+      // contract) across three micro-batch slicings
+      val snap = Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
+      def p2(x: Double) = BigDecimal(x).setScale(2, HALF_UP)
+      val ops = (snap.filter(_._1 % 7 == 0).map { case (k, ck, st, p) =>
+          CdcOp(k, 1L, "U", ck, st,
+            (p2(p) * BigDecimal("1.10")).setScale(2, HALF_UP).toDouble) } ++
+        snap.filter(_._1 % 1000 == 1).map { case (k, ck, _, p) =>
+          CdcOp(k + 10000000L, 1L, "U", ck, "N", p2(p).toDouble) } ++
+        snap.filter(_._1 % 21 == 0).map { case (k, ck, st, p) =>
+          CdcOp(k, 2L, "U", ck, st, (p2(p) + 5).setScale(2, HALF_UP).toDouble) } ++
+        snap.filter(_._1 % 13 == 0).map { case (k, _, _, _) =>
+          CdcOp(k, 3L, "D", 0L, "", 0.0) }).sortBy(_.seq)
+      val src = MemoryStream[CdcOp]
+      val q = cdcApplyStream(src.toDS())
+        .writeStream.format("memory").queryName("cdc_mat_test")
+        .outputMode("append").start()
+      try {
+        ops.grouped(math.max(1, ops.length / 3)).foreach { chunk =>
+          src.addData(chunk.toIndexedSeq: _*)
+          q.processAllAvailable()
         }
-      }
-    } finally {
-      q.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+        val view = spark.table("cdc_mat_test").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getLong(3),
+            r.getString(4), r.getDouble(5), r.getLong(6)))
+          .groupBy(_._1).map { case (k, rows) => k -> rows.maxBy(_._7) }
+        val batch = graft.SparkEntry.queries("q49_cdc_merge")(spark, sfDir).collect()
+          .map(r => r.getLong(0) ->
+            ((r.getLong(1), r.getString(2), r.getDouble(3), r.getLong(4)))).toMap
+        val touched = ops.map(_.key).toSet
+        assert(touched.nonEmpty && view.keySet == touched,
+          "one materialized row per touched key, no extras")
+        touched.foreach { k =>
+          val (_, ver, deleted, ck, st, pr, _) = view(k)
+          if (k % 13 == 0 && k < 10000000L) {
+            assert(deleted && ver == 3L, s"key $k must materialize as a tombstone")
+            assert(!batch.contains(k), s"batch must have dropped deleted key $k")
+          } else {
+            assert(!deleted && batch(k) == ((ck, st, pr, ver)),
+              s"key $k: view ($ck,$st,$pr,$ver) != batch ${batch(k)}")
+          }
+        }
+      } finally q.stop()
     }
   }
 
   test("streaming SCD2 maintenance (A31): latest-per-version equals the batch operator") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     // transformWithState runs only on the RocksDB provider
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    // Round-5 regression guard: the (then private, nested) ScdState case
-    // class made every state read/write fall back to the INTERPRETED
-    // projection ("Expr codegen error ... falling back to interpreter
-    // mode" x10 in the suite log) — tests passed but a production CDC
-    // stream would pay the interpreter per state touch. Capture WARNs
-    // for the duration of the streaming run and assert the fallback is
-    // gone, so a re-nesting can't slip back in silently.
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val logCtx = org.apache.logging.log4j.LogManager.getContext(false)
-      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-    val rootCfg = logCtx.getConfiguration.getRootLogger
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "graft-codegen-capture", null, null, false,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
-        captured.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    rootCfg.addAppender(capture, org.apache.logging.log4j.Level.WARN, null)
-    logCtx.updateLoggers()
-    // real orders for a subset of customers, fed in event-time order
-    // (the CDC commit-order contract) across THREE micro-batch slicings
-    // chosen to split customers' histories mid-span
-    val orders = Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      .as[EventsPipeline.OrderRow]
-      .collect()
-      .filter(_.o_custkey % 37 == 0)
-      .sortBy(r => (r.o_orderdate.getTime, r.o_orderkey))
-    assert(orders.length > 30, s"need a real workload, got ${orders.length} orders")
-    val cut1 = orders.length / 3
-    val cut2 = 2 * orders.length / 3
-    val src = MemoryStream[EventsPipeline.OrderRow]
-    val q = EventsPipeline.scd2Stream(src.toDS())
-      .writeStream.format("memory").queryName("scd2_test")
-      .outputMode("update").start()
-    try {
-      src.addData(orders.take(cut1): _*); q.processAllAvailable()
-      src.addData(orders.slice(cut1, cut2): _*); q.processAllAvailable()
-      src.addData(orders.drop(cut2): _*); q.processAllAvailable()
-      // latest emission per (customer, version) is the span's truth
-      val streamed = spark.table("scd2_test")
-        .as[EventsPipeline.ScdSpanUpdate].collect()
-        .groupBy(u => (u.c_custkey, u.version))
-        .map { case (_, us) => us.maxBy(_.seq) }
-        .map(u => (u.c_custkey, u.version, u.priority,
-          u.effective_from.toString, u.effective_to.map(_.toString), u.n_orders))
-        .toSet
-      val custs = orders.map(_.o_custkey).toSet
-      import org.apache.spark.sql.functions.col
-      val batch = graft.operators.Relational
-        .scd2Dimension(Tables.orders(spark, sfDir))
-        .filter(col("c_custkey").isin(custs.toSeq: _*))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getDate(3).toString, Option(r.getDate(4)).map(_.toString), r.getLong(5)))
-        .toSet
-      assert(streamed == batch,
-        s"stream/batch SCD2 divergence: extra=${streamed -- batch} missing=${batch -- streamed}")
-      // non-vacuous: real histories must contain BOTH closed and open spans
-      assert(streamed.exists(_._5.isDefined) && streamed.exists(_._5.isEmpty),
-        "corpus produced no closed (or no open) spans — the twin check proved nothing")
-      // probe WARN proves the appender is actually wired (a capture that
-      // silently attached to nothing would pass the no-fallback assert)
-      org.apache.logging.log4j.LogManager.getLogger(getClass)
-        .warn("graft-capture-probe")
-      assert(captured.toArray(Array.empty[String]).exists(_.contains("graft-capture-probe")),
-        "log-capture appender saw nothing — the no-fallback assertion is vacuous")
-      val fallbacks = captured.toArray(Array.empty[String]).filter(m =>
-        m.contains("Expr codegen error") || m.contains("falling back to interpreter"))
-      assert(fallbacks.isEmpty,
-        s"state encoder fell back to interpreted projection:\n${fallbacks.take(3).mkString("\n")}")
-    } finally {
-      q.stop()
-      rootCfg.removeAppender("graft-codegen-capture")
+    withConf(EventsPipeline.RocksDBStateStore) {
+      // Round-5 regression guard: the (then private, nested) ScdState case
+      // class made every state read/write fall back to the INTERPRETED
+      // projection ("Expr codegen error ... falling back to interpreter
+      // mode" x10 in the suite log) — tests passed but a production CDC
+      // stream would pay the interpreter per state touch. Capture WARNs
+      // for the duration of the streaming run and assert the fallback is
+      // gone, so a re-nesting can't slip back in silently.
+      val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val logCtx = org.apache.logging.log4j.LogManager.getContext(false)
+        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+      val rootCfg = logCtx.getConfiguration.getRootLogger
+      val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+          "graft-codegen-capture", null, null, false,
+          org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+        override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+          captured.add(e.getMessage.getFormattedMessage)
+      }
+      capture.start()
+      rootCfg.addAppender(capture, org.apache.logging.log4j.Level.WARN, null)
       logCtx.updateLoggers()
-      capture.stop()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+      // real orders for a subset of customers, fed in event-time order
+      // (the CDC commit-order contract) across THREE micro-batch slicings
+      // chosen to split customers' histories mid-span
+      val orders = Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
+        .as[EventsPipeline.OrderRow]
+        .collect()
+        .filter(_.o_custkey % 37 == 0)
+        .sortBy(r => (r.o_orderdate.getTime, r.o_orderkey))
+      assert(orders.length > 30, s"need a real workload, got ${orders.length} orders")
+      val cut1 = orders.length / 3
+      val cut2 = 2 * orders.length / 3
+      val src = MemoryStream[EventsPipeline.OrderRow]
+      val q = EventsPipeline.scd2Stream(src.toDS())
+        .writeStream.format("memory").queryName("scd2_test")
+        .outputMode("update").start()
+      try {
+        src.addData(orders.take(cut1): _*); q.processAllAvailable()
+        src.addData(orders.slice(cut1, cut2): _*); q.processAllAvailable()
+        src.addData(orders.drop(cut2): _*); q.processAllAvailable()
+        // latest emission per (customer, version) is the span's truth
+        val streamed = spark.table("scd2_test")
+          .as[EventsPipeline.ScdSpanUpdate].collect()
+          .groupBy(u => (u.c_custkey, u.version))
+          .map { case (_, us) => us.maxBy(_.seq) }
+          .map(u => (u.c_custkey, u.version, u.priority,
+            u.effective_from.toString, u.effective_to.map(_.toString), u.n_orders))
+          .toSet
+        val custs = orders.map(_.o_custkey).toSet
+        import org.apache.spark.sql.functions.col
+        val batch = graft.operators.Relational
+          .scd2Dimension(Tables.orders(spark, sfDir))
+          .filter(col("c_custkey").isin(custs.toSeq: _*))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+            r.getDate(3).toString, Option(r.getDate(4)).map(_.toString), r.getLong(5)))
+          .toSet
+        assert(streamed == batch,
+          s"stream/batch SCD2 divergence: extra=${streamed -- batch} missing=${batch -- streamed}")
+        // non-vacuous: real histories must contain BOTH closed and open spans
+        assert(streamed.exists(_._5.isDefined) && streamed.exists(_._5.isEmpty),
+          "corpus produced no closed (or no open) spans — the twin check proved nothing")
+        // probe WARN proves the appender is actually wired (a capture that
+        // silently attached to nothing would pass the no-fallback assert)
+        org.apache.logging.log4j.LogManager.getLogger(getClass)
+          .warn("graft-capture-probe")
+        assert(captured.toArray(Array.empty[String]).exists(_.contains("graft-capture-probe")),
+          "log-capture appender saw nothing — the no-fallback assertion is vacuous")
+        val fallbacks = captured.toArray(Array.empty[String]).filter(m =>
+          m.contains("Expr codegen error") || m.contains("falling back to interpreter"))
+        assert(fallbacks.isEmpty,
+          s"state encoder fell back to interpreted projection:\n${fallbacks.take(3).mkString("\n")}")
+      } finally {
+        q.stop()
+        rootCfg.removeAppender("graft-codegen-capture")
+        logCtx.updateLoggers()
+        capture.stop()
       }
     }
   }
@@ -2163,184 +2139,196 @@ class EventsPipelineSpec extends SparkSpec {
   test("streaming ACF period monitor (A65): final emission per user == batch q74's is_period row across two slicings; positions strictly advance") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val batch = graft.operators.Relational.tsAcf(Tables.events(spark, sf),
-        maxLag = 16)
-      .filter(col("is_period")).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val nPerUser = rows.groupBy(_._2).map { case (u, rs) => u -> rs.length.toLong }
-    Seq(5, 2).foreach { slices =>
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.acfPeriodTws(src.toDS(), maxLag = 16)
-        .writeStream.format("memory").queryName(s"acf_tws_$slices")
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        val got = spark.table(s"acf_tws_$slices").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        // one emission per arrival past n=2, positions strictly advance
-        got.groupBy(_._1).foreach { case (u, es) =>
-          val ps = es.map(_._2).sorted
-          assert(ps.toSeq == (3L to nPerUser(u)).toSeq,
-            s"user $u emissions not one-per-arrival: ${ps.take(5).toSeq}...")
-        }
-        // the final live estimate IS the batch argmax, bit-equal
-        val fin = got.groupBy(_._1).map { case (u, es) =>
-          u -> { val l = es.maxBy(_._2); (l._3, l._4) } }
-        assert(fin == batch,
-          s"slices=$slices: final estimates diverge from batch q74: " +
-            s"${(fin.toSet -- batch.toSet).take(3)} vs ${(batch.toSet -- fin.toSet).take(3)}")
-      } finally q.stop()
-    }
-    saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    withConf(EventsPipeline.RocksDBStateStore) {
+      // returns the emissions (user, position, period, score) of the last slicing
+      def twin(rows: Seq[(Long, Long, Double)], maxLag: Int, chunks: Seq[Int],
+          name: String): Array[(Long, Long, Long, Double)] = {
+        val batch = graft.operators.Relational.tsAcf(
+            rows.toDF("event_id", "user_id", "value"), maxLag = maxLag)
+          .filter(col("is_period")).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+        val nPerUser = rows.groupBy(_._2).map { case (u, rs) => u -> rs.length.toLong }
+        chunks.map { chunk =>
+          val src = MemoryStream[(Long, Long, Double)]
+          val q = EventsPipeline.acfPeriodTws(src.toDS(), maxLag = maxLag)
+            .writeStream.format("memory").queryName(s"${name}_$chunk")
+            .outputMode("update").start()
+          try {
+            rows.grouped(chunk).foreach { c =>
+              src.addData(c: _*)
+              q.processAllAvailable()
+            }
+            val got = spark.table(s"${name}_$chunk").collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+            // one emission per arrival past n=2, positions strictly advance
+            got.groupBy(_._1).foreach { case (u, es) =>
+              val ps = es.map(_._2).sorted
+              assert(ps.toSeq == (3L to nPerUser(u)).toSeq,
+                s"user $u emissions not one-per-arrival: ${ps.take(5).toSeq}...")
+            }
+            // the final live estimate IS the batch argmax, bit-equal
+            val fin = got.groupBy(_._1).map { case (u, es) =>
+              u -> { val l = es.maxBy(_._2); (l._3, l._4) } }
+            assert(fin == batch,
+              s"$chunk rows per micro-batch: final estimates diverge from batch q74: " +
+                s"${(fin.toSet -- batch.toSet).take(3)} vs ${(batch.toSet -- fin.toSet).take(3)}")
+            got
+          } finally q.stop()
+        }.last
+      }
+      val rows = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      twin(rows, maxLag = 16, Seq(5, 2).map(slices => math.max(1, rows.length / slices)),
+        "acf_tws")
+      // the dominant cycle changes mid-stream, period-3 sawtooth -> period-5
+      // pattern: the live estimate reads 3 while the old regime dominates
+      // and flips to 5 once the new regime's pair mass outweighs it
+      val p3 = Seq(0.0, 9.0, 3.0)
+      val p5 = Seq(1.0, 7.0, 2.0, 9.0, 4.0)
+      val shift = (1 to 300).map(t =>
+        (t.toLong, 1L, if (t <= 60) p3((t - 1) % 3) else p5((t - 61) % 5)))
+      val live = twin(shift, maxLag = 8, Seq(60), "acf_tws_shift")
+        .map(e => e._2 -> e._3).toMap
+      assert(live(60L) == 3L && live(300L) == 5L,
+        s"period at 60 = ${live(60L)}, at 300 = ${live(300L)}")
     }
   }
 
   test("streaming seasonal MA (A66): delayed-by-h trend emissions bit-equal batch q76 across two slicings; final phase sums derive the batch seasonal index exactly") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val batch = graft.operators.Relational.tsSeasonalDecompose(
-        Tables.events(spark, sf), period = 4).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getDouble(4)))
-    val bTrend = batch.map(t => (t._1, t._2) -> t._3).toMap
-    val bSeas = batch.map(t => (t._1, t._2 % 4) -> t._4).toMap
-    Seq(5, 3).foreach { slices =>
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.seasonalMaTws(src.toDS(), period = 4)
-        .writeStream.format("memory").queryName(s"seas_tws_$slices")
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        val got = spark.table(s"seas_tws_$slices").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5)))
-        // every interior row emits exactly once and the r4 trend is the
-        // batch column bit-for-bit
-        assert(got.length == batch.length,
-          s"slices=$slices: ${got.length} emissions vs ${batch.length} batch rows")
-        got.foreach { case (u, pos, _, tnum, _, _) =>
-          val t = graft.operators.Num.r4Double(tnum.toDouble / 800.0)
-          assert(t == bTrend((u, pos)),
-            s"slices=$slices: trend diverges at ($u,$pos): $t vs ${bTrend((u, pos))}")
-        }
-        // the LAST emission per (user, phase) carries the batch phase
-        // sufficient statistics: replay the seasonal tree on them
-        val fin = got.groupBy(t => (t._1, t._3)).map { case (k, es) =>
-          val l = es.maxBy(_._2); k -> ((l._5, l._6)) }
-        fin.groupBy(_._1._1).foreach { case (u, phs) =>
-          assert(phs.size == 4, s"user $u missing phases")
-          val ms = phs.toSeq.sortBy(_._1._2)
-            .map { case (_, (sp, c)) => sp.toDouble / c.toDouble / 800.0 }
-          val madj = ms.sum / 4.0
-          phs.toSeq.sortBy(_._1._2).zip(ms).foreach { case (((_, ph), _), m) =>
-            val sIdx = graft.operators.Num.r4Double(m - madj)
-            assert(sIdx == bSeas((u, ph)),
-              s"slices=$slices: seasonal diverges at ($u,$ph): $sIdx vs ${bSeas((u, ph))}")
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val sf = "/root/testdata/sf0.001"
+      val rows = Tables.events(spark, sf)
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val batch = graft.operators.Relational.tsSeasonalDecompose(
+          Tables.events(spark, sf), period = 4).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getDouble(4)))
+      val bTrend = batch.map(t => (t._1, t._2) -> t._3).toMap
+      val bSeas = batch.map(t => (t._1, t._2 % 4) -> t._4).toMap
+      Seq(5, 3).foreach { slices =>
+        val src = MemoryStream[(Long, Long, Double)]
+        val q = EventsPipeline.seasonalMaTws(src.toDS(), period = 4)
+          .writeStream.format("memory").queryName(s"seas_tws_$slices")
+          .outputMode("update").start()
+        try {
+          rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
+            src.addData(chunk.toIndexedSeq: _*)
+            q.processAllAvailable()
           }
-        }
-      } finally q.stop()
-    }
-    saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+          val got = spark.table(s"seas_tws_$slices").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+              r.getLong(4), r.getLong(5)))
+          // every interior row emits exactly once and the r4 trend is the
+          // batch column bit-for-bit
+          assert(got.length == batch.length,
+            s"slices=$slices: ${got.length} emissions vs ${batch.length} batch rows")
+          got.foreach { case (u, pos, _, tnum, _, _) =>
+            val t = graft.operators.Num.r4Double(tnum.toDouble / 800.0)
+            assert(t == bTrend((u, pos)),
+              s"slices=$slices: trend diverges at ($u,$pos): $t vs ${bTrend((u, pos))}")
+          }
+          // the LAST emission per (user, phase) carries the batch phase
+          // sufficient statistics: replay the seasonal tree on them
+          val fin = got.groupBy(t => (t._1, t._3)).map { case (k, es) =>
+            val l = es.maxBy(_._2); k -> ((l._5, l._6)) }
+          fin.groupBy(_._1._1).foreach { case (u, phs) =>
+            assert(phs.size == 4, s"user $u missing phases")
+            val ms = phs.toSeq.sortBy(_._1._2)
+              .map { case (_, (sp, c)) => sp.toDouble / c.toDouble / 800.0 }
+            val madj = ms.sum / 4.0
+            phs.toSeq.sortBy(_._1._2).zip(ms).foreach { case (((_, ph), _), m) =>
+              val sIdx = graft.operators.Num.r4Double(m - madj)
+              assert(sIdx == bSeas((u, ph)),
+                s"slices=$slices: seasonal diverges at ($u,$ph): $sIdx vs ${bSeas((u, ph))}")
+            }
+          }
+        } finally q.stop()
+      }
     }
   }
 
   test("streaming CUSUM alarms (A67): emitted alarm set bit-equal to batch q80 across two slicings; O(1) scalar state") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val batch = graft.operators.Relational.tsCusumAlarms(
-        Tables.events(spark, sf)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(batch.nonEmpty, "fixture must produce some alarms")
-    Seq(4, 2).foreach { slices =>
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.cusumAlarmsTws(src.toDS())
-        .writeStream.format("memory").queryName(s"cusum_tws_$slices")
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        val got = spark.table(s"cusum_tws_$slices").collect()
+    withConf(EventsPipeline.RocksDBStateStore) {
+      // returns the batch alarm set and, for the last slicing, the number
+      // of alarms emitted after each micro-batch
+      def twin(rows: Seq[(Long, Long, Double)], chunks: Seq[Int],
+          name: String): (Set[(Long, Long, Double)], Seq[Long]) = {
+        val batch = graft.operators.Relational.tsCusumAlarms(
+            rows.toDF("event_id", "user_id", "value")).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(got == batch,
-          s"slices=$slices: missing=${(batch -- got).take(3)} extra=${(got -- batch).take(3)}")
-      } finally q.stop()
-    }
-    saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+        assert(batch.nonEmpty, s"$name: fixture must produce some alarms")
+        val emitted = chunks.map { chunk =>
+          val src = MemoryStream[(Long, Long, Double)]
+          val q = EventsPipeline.cusumAlarmsTws(src.toDS())
+            .writeStream.format("memory").queryName(s"${name}_$chunk")
+            .outputMode("update").start()
+          try {
+            val counts = rows.grouped(chunk).map { c =>
+              src.addData(c: _*)
+              q.processAllAvailable()
+              spark.table(s"${name}_$chunk").count()
+            }.toVector
+            val got = spark.table(s"${name}_$chunk").collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+            assert(got == batch,
+              s"$chunk rows per micro-batch: missing=${(batch -- got).take(3)} extra=${(got -- batch).take(3)}")
+            counts
+          } finally q.stop()
+        }
+        (batch, emitted.last)
+      }
+      val rows = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      twin(rows, Seq(4, 2).map(slices => math.max(1, rows.length / slices)), "cusum_tws")
+      // the level holds at 5 and shifts to 9 at t = 41: exactly ONE alarm,
+      // at the integer-exact evidence crossing (p = 47, S = 14.00), and
+      // none yet after the first 44 arrivals
+      val shift = (1 to 80).map(t => (t.toLong, 1L, if (t <= 40) 5.0 else 9.0))
+      val (alarms, counts) = twin(shift, Seq(44), "cusum_tws_shift")
+      assert(alarms == Set((1L, 47L, 14.0)) && counts == Seq(0L, 1L),
+        s"alarms=$alarms, emitted after each micro-batch=$counts")
     }
   }
 
   test("streaming trend monitor (A68): final emission per user bit-equal to batch q81 across two slicings; fits emitted from n=2 on") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val saved = EventsPipeline.RocksDBStateStore.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    EventsPipeline.RocksDBStateStore.foreach { case (k, v) => spark.conf.set(k, v) }
-    val sf = "/root/testdata/sf0.001"
-    val rows = Tables.events(spark, sf)
-      .select("event_id", "user_id", "value").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val batch = graft.operators.Relational.tsTrendLine(Tables.events(spark, sf))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
-    Seq(4, 2).foreach { slices =>
-      val src = MemoryStream[(Long, Long, Double)]
-      val q = EventsPipeline.trendLineTws(src.toDS())
-        .writeStream.format("memory").queryName(s"trend_tws_$slices")
-        .outputMode("update").start()
-      try {
-        rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        val got = spark.table(s"trend_tws_$slices").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getDouble(3), r.getDouble(4)))
-        got.groupBy(_._1).foreach { case (u, es) =>
-          assert(es.map(_._2).sorted.toSeq == (2L to es.map(_._2).max).toSeq,
-            s"user $u: one fit per arrival from n=2")
-          val l = es.maxBy(_._2)
-          assert((l._2, l._3, l._4, l._5) == batch(u),
-            s"slices=$slices user $u: final fit ${(l._2, l._3, l._4, l._5)} != batch ${batch(u)}")
-        }
-      } finally q.stop()
-    }
-    saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    withConf(EventsPipeline.RocksDBStateStore) {
+      val sf = "/root/testdata/sf0.001"
+      val rows = Tables.events(spark, sf)
+        .select("event_id", "user_id", "value").orderBy("event_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val batch = graft.operators.Relational.tsTrendLine(Tables.events(spark, sf))
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
+      Seq(4, 2).foreach { slices =>
+        val src = MemoryStream[(Long, Long, Double)]
+        val q = EventsPipeline.trendLineTws(src.toDS())
+          .writeStream.format("memory").queryName(s"trend_tws_$slices")
+          .outputMode("update").start()
+        try {
+          rows.grouped(math.max(1, rows.length / slices)).foreach { chunk =>
+            src.addData(chunk.toIndexedSeq: _*)
+            q.processAllAvailable()
+          }
+          val got = spark.table(s"trend_tws_$slices").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+              r.getDouble(3), r.getDouble(4)))
+          got.groupBy(_._1).foreach { case (u, es) =>
+            assert(es.map(_._2).sorted.toSeq == (2L to es.map(_._2).max).toSeq,
+              s"user $u: one fit per arrival from n=2")
+            val l = es.maxBy(_._2)
+            assert((l._2, l._3, l._4, l._5) == batch(u),
+              s"slices=$slices user $u: final fit ${(l._2, l._3, l._4, l._5)} != batch ${batch(u)}")
+          }
+        } finally q.stop()
+      }
     }
   }
 }

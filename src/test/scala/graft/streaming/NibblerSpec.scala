@@ -184,15 +184,23 @@ class NibblerSpec extends SparkSpec {
     val running = new java.util.concurrent.atomic.AtomicInteger()
     val maxConcurrent = new java.util.concurrent.atomic.AtomicInteger()
     val finished = new ConcurrentLinkedQueue[Int]()
+    val releaseFirst = new CountDownLatch(1)
     val nib = Nibbler.start(spark, NibblerConfig[Int](
-      // ignores cancellation entirely: holds the worker for 600ms while the
+      // ignores cancellation entirely: holds the worker (the first
+      // invocation until released, later ones for 600ms) while the
       // nibbler declares it timed out at 100ms and moves on
       processor = (_, b) => {
         val now = running.incrementAndGet()
         maxConcurrent.updateAndGet(m => math.max(m, now))
-        val deadline = System.nanoTime() + 600.millis.toNanos
-        while (System.nanoTime() < deadline) {
-          try Thread.sleep(10) catch { case _: InterruptedException => () }
+        if (b.head == 1) {
+          while (releaseFirst.getCount > 0) {
+            try releaseFirst.await() catch { case _: InterruptedException => () }
+          }
+        } else {
+          val deadline = System.nanoTime() + 600.millis.toNanos
+          while (System.nanoTime() < deadline) {
+            try Thread.sleep(10) catch { case _: InterruptedException => () }
+          }
         }
         finished.add(b.head)
         running.decrementAndGet()
@@ -204,11 +212,20 @@ class NibblerSpec extends SparkSpec {
       onError = (_, _) => ()))
     nib.push(1)
     nib.processAllAvailable()
-    nib.push(2)
+    // capacity is 1: item 2 drains into a flush that waits on the stale
+    // invocation, item 3 fills the channel, and the push of item 4 blocks
+    // until the stale invocation returns
+    val pushed = new CountDownLatch(1)
+    val producer = new Thread(() => { nib.pushAll(Seq(2, 3, 4)); pushed.countDown() }, "producer")
+    producer.start()
+    assert(!pushed.await(500, TimeUnit.MILLISECONDS),
+      "a push beyond capacity completed while the stale invocation ran")
+    releaseFirst.countDown()
+    assert(pushed.await(10, TimeUnit.SECONDS), "the push never completed")
     nib.processAllAvailable()
     val deadline = System.nanoTime() + 10.seconds.toNanos
-    while (finished.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(finished.asScala.toVector == Vector(1, 2))
+    while (finished.size < 4 && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(finished.asScala.toVector == Vector(1, 2, 3, 4))
     assert(maxConcurrent.get == 1,
       s"stale and fresh processor invocations overlapped (max=${maxConcurrent.get})")
     nib.stop()
